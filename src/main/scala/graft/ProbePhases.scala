@@ -29,7 +29,7 @@ object ProbePhases {
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().collect()
-    import graft.operators.{GraftSimilarity, HybridRetrieval}
+    import graft.operators.{GraftSimilarity, HybridRetrieval, IvfObjectStore}
 
     def phase[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()
@@ -61,10 +61,13 @@ object ProbePhases {
         val idx = phase("buildIvfIndex (lazy)") {
           graft.operators.GraftSimilarity.buildIvfIndex(e)
         }
-        phase("writeIvfPqStore") { GraftPq.writeIvfPqStore(idx, cbM, out) }
+        phase("IvfObjectStore.create(pq)") {
+          IvfObjectStore.create(spark, idx, out, pq = Some(cbM))
+        }
         val served = phase("serve construction") {
-          GraftPq.ivfPqTopKStored(spark, out, qb, k = 5, nprobe = 4,
-                                  rerankFactor = 4)
+          GraftPq.ivfPqTopKWithCw(IvfObjectStore.read(spark, out),
+                                  GraftPq.readPqCodebook(spark, out), qb,
+                                  k = 5, nprobe = 4, rerankFactor = 4)
         }
         phase("serve execution (noop)") {
           served.write.format("noop").mode("overwrite").save()
@@ -148,11 +151,11 @@ object ProbePhases {
           val idx = phase("buildIvfIndex (lazy)") {
             GraftSimilarity.buildIvfIndex(e)
           }
-          phase("writeIvfIndex(b1)") {
-            GraftSimilarity.writeIvfIndex(idx, out, b1 = true)
+          phase("IvfObjectStore.create(b1)") {
+            IvfObjectStore.create(spark, idx, out, b1 = true)
           }
-          val stored = phase("readIvfIndex") {
-            GraftSimilarity.readIvfIndex(spark, out)
+          val stored = phase("IvfObjectStore.read") {
+            IvfObjectStore.read(spark, out)
           }
           val sem = phase("sem leg construction") {
             GraftSimilarity.ivfTopKWithB1(stored,
@@ -175,7 +178,9 @@ object ProbePhases {
           val cb = phase("trainPq (lazy)") {
             GraftPq.trainPq(e, m = 8, ksub = 16, iters = 2)
           }
-          phase("writeIvfPqStore") { GraftPq.writeIvfPqStore(idx, cb, out) }
+          phase("IvfObjectStore.create(pq)") {
+            IvfObjectStore.create(spark, idx, out, pq = Some(cb))
+          }
           val served = phase("serve construction") {
             HybridRetrieval.hybridTopKPqStored(spark, out, docs, queries,
               k = 10, kCand = 30, rrfK = 60, nprobe = 4, rerankFactor = 4)
@@ -309,12 +314,15 @@ object ProbePhases {
                 col("v").as("qv"))
       val out = s"/tmp/graft_io/${new java.io.File(sfDir).getName}" +
         "/hybrid_q8_store"
+      val fs = new org.apache.hadoop.fs.Path(out)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(out), true)
       val idx = phase("buildIvfIndex (lazy)") {
         GraftSimilarity.buildIvfIndex(e)
       }
-      phase("writeIvfIndex") { GraftSimilarity.writeIvfIndex(idx, out) }
-      val stored = phase("readIvfIndex") {
-        GraftSimilarity.readIvfIndex(spark, out)
+      phase("IvfObjectStore.create") { IvfObjectStore.create(spark, idx, out) }
+      val stored = phase("IvfObjectStore.read") {
+        IvfObjectStore.read(spark, out)
       }
       phase("q.count()") { queries.count() }
       val sem = phase("sem leg construction") {

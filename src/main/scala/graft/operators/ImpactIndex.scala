@@ -49,6 +49,88 @@ import org.apache.spark.sql.functions._
   */
 object ImpactIndex {
 
+  // ------------------------------------------------------------------
+  // Store FILESYSTEM CONTRACT
+  //
+  // [[write]]'s rebuild lifecycle is a rename-committed overwrite: the
+  // impact, term and meta frames land through Spark's file commit
+  // protocol, whose task and job commits RENAME staged files into place
+  // and whose readers trust a consistent directory LISTING. HDFS and
+  // local files provide both. Object stores generally do NOT: S3A's
+  // rename is a non-atomic client-side copy+delete and GCS's directory
+  // rename is per-object copy, so a torn overwrite could serve
+  // half-old, half-new buckets. The store therefore REFUSES to write on
+  // a filesystem not known to satisfy the contract instead of
+  // corrupting quietly. Reads stay ungated: a store SNAPSHOT copied to
+  // an object store serves fine ([[read]] never mutates). The
+  // manifest-committed stores ([[IvfObjectStore]], [[ImpactObjectStore]])
+  // need no rename and carry no gate.
+  //
+  // Degraded mode: setting `graft.ivf.store.fs.force=true` in the Hadoop
+  // conf accepts an unlisted filesystem. That is a DOCUMENTED CONTRACT
+  // SHIFT, not a free pass: the operator asserts that all writers are
+  // serialized EXTERNALLY so no rename/list race can occur, and that a
+  // mid-rename crash may need manual inspection. The intended production
+  // posture on S3/GCS is: build the store on an HDFS-semantics tier,
+  // publish immutable snapshots to the object store for serving.
+  // ------------------------------------------------------------------
+
+  /** Hadoop conf key for the documented degraded mode (see the contract
+    * note above): accept a filesystem outside the known rename-atomic
+    * set. */
+  val StoreFsForceKey = "graft.ivf.store.fs.force"
+
+  /** Filesystems known to provide atomic rename + consistent listing +
+    * atomic create-if-absent. `file` (and RawLocal's `local`) are POSIX
+    * renames; `hdfs`/`viewfs`/`webhdfs`/`hdfs-over-routers` are the
+    * NameNode's atomic namespace ops. */
+  private val RenameAtomicSchemes =
+    Set("file", "local", "hdfs", "viewfs", "webhdfs", "swebhdfs")
+
+  /** Object-store schemes whose rename is a non-atomic copy(+delete) —
+    * refused with the specific reason rather than the generic
+    * unknown-scheme message. */
+  private val ObjectStoreSchemes =
+    Set("s3", "s3a", "s3n", "gs", "wasb", "wasbs", "swift", "oss",
+        "cosn", "obs")
+
+  /** Typed refusal for a store filesystem outside the contract — callers
+    * either move the store or opt into [[StoreFsForceKey]]. */
+  final class StoreFsContractViolation(msg: String)
+      extends IllegalStateException(msg)
+
+  /** Gate every store MUTATION on the filesystem contract above. Called
+    * at the top of [[write]] — cheap (no RPC beyond the capability
+    * probe), and failing at open beats failing mid-overwrite.
+    */
+  private[operators] def requireStoreFsContract(
+      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration, ctx: String): Unit = {
+    if (conf.getBoolean(StoreFsForceKey, false)) return
+    val scheme = Option(fs.getUri.getScheme).getOrElse("file").toLowerCase
+    def refuse(why: String): Nothing = throw new StoreFsContractViolation(
+      s"$ctx: store filesystem '$scheme://' $why. The at-rest " +
+      "store's rename-committed writes require ATOMIC RENAME, " +
+      "CONSISTENT DIRECTORY LISTING and ATOMIC CREATE-IF-ABSENT (HDFS " +
+      "semantics). Keep the mutable store on HDFS-compatible storage " +
+      "and publish snapshots to object stores for read-only serving; " +
+      s"or, if ALL writers are serialized externally, set " +
+      s"$StoreFsForceKey=true in the Hadoop conf to accept the risk " +
+      "(documented degraded mode).")
+    // a filesystem that self-reports inconsistent listing is out
+    // regardless of scheme (Hadoop CommonPathCapabilities)
+    val inconsistent =
+      try fs.hasPathCapability(dir, "fs.capability.directory.listing.inconsistent")
+      catch { case _: IllegalArgumentException | _: java.io.IOException |
+                   _: UnsupportedOperationException => false }
+    if (inconsistent) refuse("reports inconsistent directory listing")
+    if (ObjectStoreSchemes.contains(scheme))
+      refuse("is an object store whose rename is a non-atomic copy+delete")
+    if (!RenameAtomicSchemes.contains(scheme))
+      refuse("is not in the known rename-atomic set " +
+             RenameAtomicSchemes.toSeq.sorted.mkString("{", ", ", "}"))
+  }
+
   /** Read handle: the store's frames plus the build constants. */
   final case class StoredImpacts(impacts: DataFrame, terms: DataFrame,
                                  buckets: Int, k1: Double, b: Double) {
@@ -93,14 +175,11 @@ object ImpactIndex {
     require(buckets >= 1, s"ImpactIndex.write: buckets must be >= 1, " +
       s"got $buckets")
     val spark = docs.sparkSession
-    // the rebuild lifecycle is a rename-committed overwrite — the same
-    // filesystem contract the directory-layout IVF store gates on
-    // (atomic rename; a torn overwrite on an object store could serve
-    // half-old half-new buckets). Publish snapshots to object stores
-    // for read-only serving, as with writeIvfIndex.
+    // the rebuild lifecycle is a rename-committed overwrite (see the
+    // filesystem contract note above)
     val hConf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(dir)
-    GraftSimilarity.requireStoreFsContract(
+    requireStoreFsContract(
       p.getFileSystem(hConf), p, hConf, "ImpactIndex.write")
     val imp = TextRank.bm25Impacts(
         docs.select(col(idCol).cast("long").as("doc_id"), col(textCol)),

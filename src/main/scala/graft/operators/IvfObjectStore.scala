@@ -157,10 +157,8 @@ object ManifestCommitProtocol {
   * Crash windows: dying before publish leaves orphaned data files (no
   * reader ever sees them; [[vacuum]] deletes them); dying after publish
   * IS the commit. There is no window where a reader can observe a
-  * half-applied mutation, which is what the rename-based
-  * [[GraftSimilarity.writeIvfIndex]] layout could not promise off HDFS —
-  * hence its filesystem-contract gate refuses object stores while THIS
-  * layout is the supported way to run the mutable store on them.
+  * half-applied mutation, on HDFS, local files and object stores alike —
+  * this is graft's one at-rest IVF layout.
   *
   * Layout under `dir`:
   * {{{
@@ -169,8 +167,11 @@ object ManifestCommitProtocol {
   *   data/c_id=<cell>/<file>.parquet  immutable, cell-partitioned
   * }}}
   * The `data/` keys keep the `c_id=` partition form so a manifest-driven
-  * read (`basePath` + explicit file list) yields the same cell-pruned
-  * scan shape as the directory store.
+  * read (`basePath` + explicit file list) yields a cell-partitioned
+  * scan: serving a batch through [[GraftSimilarity.ivfTopKWith]] plans
+  * dynamic partition pruning on the probe join, so only the probed
+  * cells' files are read (OperatorLibSpec pins `dynamicpruning` and the
+  * scan's file count).
   *
   * Scale: the manifest holds one line per live file — with compaction
   * keeping ~1 file per cell that is √N lines (~31k at 1e9 vectors, ~2 MB
@@ -344,15 +345,56 @@ object IvfObjectStore {
         "another protocol handled the write"))
   }
 
-  // same at-rest shape as the directory layout (GraftSimilarity
-  // .storedLayout): q8 serving column + n_id-sorted cell files (plus the
-  // PQ code word when the store carries a codebook), so ivfTopKWithQ8 /
-  // ivfPqTopKWithCw serve either substrate identically
+  /** The at-rest shape of an assigned frame, shared by every path that
+    * writes cell files (create, append, compact, delete): the q8 serving
+    * column attached (unless the frame already carries one — a
+    * compaction rewrite must not re-quantize), one shuffle on cell id,
+    * rows n_id-sorted within each cell file for the rerank fetch's
+    * row-group pruning. */
+  private def storedLayout(assigned: DataFrame, q4: Boolean = false,
+                           b1: Boolean = false): DataFrame = {
+    val withQ8 =
+      if (assigned.columns.contains("q8")) assigned
+      else assigned.withColumn("q8", expr("graft_q8b(v)"))
+    // the q4 rung is OPT-IN at write (VERDICT r12 #3): its d/2 bytes are
+    // only ~6% of the file, but the graft_q4b pass on every store write
+    // is a real cost a store that never serves the int4 tier should not
+    // pay (the ann_ivf_stored 1.50× regression was exactly this). A
+    // frame already carrying q4 keeps it (append/compaction rewrites of
+    // a q4-carrying store must not drop the tier); create(q4 = true)
+    // opts a new store in.
+    val withQ4 =
+      if (withQ8.columns.contains("q4")) withQ8
+      else if (q4) withQ8.withColumn("q4", expr("graft_q4b(v)"))
+      else withQ8
+    // the 1-bit rung follows the same opt-in-at-write / keep-on-rewrite
+    // contract (serve via ivfTopKWithB1)
+    val withB1 =
+      if (withQ4.columns.contains("b1")) withQ4
+      else if (b1) withQ4.withColumn("b1", expr("graft_b1b(v)"))
+      else withQ4
+    // ScaleHints.writeWidth: one file per cell either way; a small
+    // index writes its cell files from session-width tasks instead of
+    // the ONE task AQE's byte-sized coalescing would leave (~1 s of
+    // sequential file creation per store write on the bench).
+    // Sort (c_id, n_id) EXPLICITLY (VERDICT r16 minor #6): the former
+    // sortWithinPartitions("n_id") relied on the planned write's
+    // partition-column sort being STABLE to preserve the n_id ordering
+    // the rerank fetch's row-group pruning keys on — true today
+    // (TimSort) but an implementation detail; the explicit compound
+    // sort removes the reliance and the writer's own added sort
+    ScaleHints.writeWidth(withB1, col("c_id"))
+      .sortWithinPartitions("c_id", "n_id")
+  }
+
+  // storedLayout's cell files plus the PQ code word when the store
+  // carries a codebook, so ivfTopKWithQ8 / ivfPqTopKWithCw serve the
+  // stored frames exactly as they serve an in-memory index
   private def stageAssigned(dir: String, assigned: DataFrame,
                             pq: Option[GraftPq.PqCodebook],
                             q4: Boolean = false,
                             b1: Boolean = false): Seq[String] =
-    writeVia(GraftSimilarity.storedLayout(
+    writeVia(storedLayout(
                pq.map(GraftPq.withCw(_, assigned)).getOrElse(assigned),
                q4, b1),
              s"$dir/data", Seq("c_id")).map(r => s"data/$r")
@@ -488,8 +530,8 @@ object IvfObjectStore {
              idCol: String = "vec_id", vecCol: String = "v",
              batchTag: Option[String] = None): Unit = {
     batchTag.foreach(t => require(t.matches("[A-Za-z0-9_]+"),
-      s"batchTag '$t' must match [A-Za-z0-9_]+ (same tag grammar as the " +
-      "directory store: silent sanitization could collide two tags)"))
+      s"batchTag '$t' must match [A-Za-z0-9_]+ (silent sanitization " +
+      "could collide two tags)"))
     // same convention as GraftSimilarity's public entry points: a fresh
     // ingest-daemon session that only reads + appends must still resolve
     // graft_cosine inside assignTo
@@ -511,7 +553,7 @@ object IvfObjectStore {
         // a metadata-carrying store appends metadata-carrying batches —
         // derive the store's metadata set from the snapshot's data
         // schema, fail-loud if the batch lacks any column (the same
-        // contract as the directory layout's appendIvfStore)
+        // contract as the in-memory GraftSimilarity.ivfAppend)
         val snapCols =
           if (m.data.isEmpty) Nil
           else
@@ -559,8 +601,7 @@ object IvfObjectStore {
     val fs = fsOf(spark, dir)
     // the rewrite repairs null code words when the store carries a
     // codebook (mergeSchema surfaces the column across generations) —
-    // compaction doubles as the PQ migration path, as on the directory
-    // layout
+    // compaction doubles as the PQ migration path
     val pq = pqCodebookIfAny(spark, dir).map(_.persist())
     // staged rewrites per cell, keyed by the exact live file set merged
     var stagedFor: Map[String, (Set[String], Seq[String])] = Map.empty
@@ -791,15 +832,26 @@ object IvfObjectStore {
     deleted
   }
 
-  /** Streaming ingest into a manifest store — the object-store twin of
-    * [[graft.streaming.CorpusStreams.ivfIngestStream]]: every micro-batch
-    * is one tagged [[append]] (`<streamId>_b<batchId>`), so a checkpoint
-    * replay no-ops on the manifest's tag set. No maintenance lock exists
-    * in this layout — a concurrent [[compact]] surfaces as a publish
-    * conflict that append absorbs with its bounded retry, staged files
-    * intact (never a failed stream; contrast the directory store's
-    * lock-wait). Tag lifetime: tags ride the manifest forever (they are
-    * one line each); no pruning needed at micro-batch cadence for years.
+  /** Streaming ingest into the store — the write-side complement of
+    * [[graft.streaming.CorpusStreams.ivfServeStream]]: every micro-batch
+    * of (id, vector) rows is one tagged [[append]]
+    * (`<streamId>_b<batchId>`) against the stored centroids, so a
+    * checkpoint replay of a committed batch no-ops on the manifest's tag
+    * set — replaying a batch id serves identically to applying it once
+    * (ManifestStoreSpec pins it). Returns the configured
+    * `DataStreamWriter`; the caller `.start()`s it and owns the
+    * checkpoint location.
+    *
+    * `streamId` scopes the tag namespace: RESTARTING from the same
+    * checkpoint must reuse the same streamId (so replays hit their
+    * tags), and a FRESH checkpoint into the same store must use a NEW
+    * streamId — batch ids restart at 0 under a fresh checkpoint, and the
+    * old streamId would make the new stream's first batches collide with
+    * committed tags and be skipped. No maintenance lock exists — a
+    * concurrent [[compact]] surfaces as a publish conflict that append
+    * absorbs with its bounded retry, staged files intact, so compaction
+    * never fails a live stream. Tag lifetime: tags ride the manifest
+    * forever (one line each); no pruning needed at micro-batch cadence.
     */
   def ingestStream(dir: String, vecs: DataFrame, streamId: String,
                    idCol: String = "vec_id", vecCol: String = "embedding")

@@ -4,15 +4,15 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{GraftSimilarity, IvfObjectStore, ManifestCommitProtocol}
 
-/** [[IvfObjectStore]] — the manifest-committed object-store layout of the
-  * at-rest IVF index. Every test here runs the store THROUGH the s3a mock
-  * scheme WITHOUT the force key: this layout's whole point is that it
-  * needs no rename atomicity and no listing consistency, so the contract
-  * gate that refuses object stores for the directory layout simply does
-  * not apply. Covers the full lifecycle (create / tagged append+replay /
-  * compact / vacuum / streaming ingest), the crash window between data
-  * staging and manifest publish, torn-manifest healing, and the
-  * optimistic version race.
+/** [[IvfObjectStore]] — the manifest-committed at-rest IVF index. Every
+  * test here runs the store THROUGH the s3a mock scheme WITHOUT the force
+  * key: the layout's whole point is that it needs no rename atomicity and
+  * no listing consistency, so the contract gate that refuses object
+  * stores for rename-committed writes simply does not apply. Covers the
+  * full lifecycle (create / tagged append+replay / compact / vacuum /
+  * streaming ingest+replay), the crash window between data staging and
+  * manifest publish, torn-manifest healing, and the optimistic version
+  * race.
   */
 class ManifestStoreSpec extends GraftFunSuite {
 
@@ -98,11 +98,6 @@ class ManifestStoreSpec extends GraftFunSuite {
       val batch = e.filter(col("vec_id").between(40, 79))
       val idx = GraftSimilarity.buildIvfIndex(seed)
       val dir = s"s3a:$base/store"
-      // the DIRECTORY layout refuses this scheme; the manifest layout is
-      // the documented alternative and must not consult that gate
-      intercept[GraftSimilarity.StoreFsContractViolation] {
-        GraftSimilarity.writeIvfIndex(idx, dir)
-      }
       IvfObjectStore.create(spark, idx, dir)
       val q = batch.limit(5)
         .select(col("vec_id").as("q_id"), col("v").as("qv"))
@@ -378,8 +373,31 @@ class ManifestStoreSpec extends GraftFunSuite {
       assert(m.tags == Set("os1_b0", "os1_b1"), m.tags.toString)
       val q = rest.limit(5)
         .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      assert(serve(IvfObjectStore.read(spark, dir), q) ==
-               serve(GraftSimilarity.ivfAppend(idx, rest), q))
+      val expected = serve(GraftSimilarity.ivfAppend(idx, rest), q)
+      assert(serve(IvfObjectStore.read(spark, dir), q) == expected)
+      // append-only at rest: every object of the v1 snapshot stays live
+      val v1 = IvfObjectStore.readAt(spark, dir, 1).assigned.inputFiles.toSet
+      assert(v1.nonEmpty &&
+             v1.subsetOf(IvfObjectStore.read(spark, dir).assigned
+                           .inputFiles.toSet),
+        "ingest must only ADD objects, never rewrite the existing ones")
+      // replaying a committed batch id (same streamId, fresh checkpoint:
+      // batch ids restart at 0) serves exactly like applying it once —
+      // no new manifest version, tag set unchanged
+      val versionsBefore = IvfObjectStore.versions(spark, dir)
+      val replay = MemoryStream[(Long, List[Double])]
+      val sq2 = IvfObjectStore
+        .ingestStream(dir, replay.toDF().toDF("vec_id", "embedding"),
+                      streamId = "os1")
+        .option("checkpointLocation", s"$base/chk_ingest_replay")
+        .start()
+      try { replay.addData(b1); sq2.processAllAvailable() }
+      finally sq2.stop()
+      assert(IvfObjectStore.versions(spark, dir) == versionsBefore,
+        "a replayed committed batch must not publish a manifest version")
+      assert(IvfObjectStore.currentManifest(fs, dir).get.tags == m.tags)
+      assert(serve(IvfObjectStore.read(spark, dir), q) == expected,
+        "a replayed batch must serve exactly like applying it once")
     }
   }
 

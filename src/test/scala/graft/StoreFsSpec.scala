@@ -2,16 +2,16 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.GraftSimilarity
+import graft.operators.ImpactIndex
 
-/** The at-rest IVF store's FILESYSTEM CONTRACT (SURVEY/README): every
-  * mutation protocol (tagged append's staging-rename, compaction's
-  * hidden-dir swap + lease, commit markers) assumes atomic rename +
-  * consistent listing + atomic create-if-absent. These tests pin that
-  * the gate refuses non-HDFS-semantics filesystems at every mutation
-  * entry point with the documented reason, that reads stay ungated, and
-  * that the documented `graft.ivf.store.fs.force` degraded mode runs
-  * the full lifecycle end-to-end (on a local FS masquerading as s3a).
+/** The rename-committed [[ImpactIndex]] store's FILESYSTEM CONTRACT
+  * (README): [[ImpactIndex.write]]'s overwrite lands through Spark's
+  * rename-based file commit and trusts a consistent listing. These tests
+  * pin that the gate refuses non-HDFS-semantics filesystems with the
+  * documented reason, that reads stay ungated, and that the documented
+  * `graft.ivf.store.fs.force` degraded mode runs write + serve end-to-end
+  * (on a local FS masquerading as s3a). The manifest-committed stores
+  * need no gate — ManifestStoreSpec runs them on the same mock scheme.
   */
 class StoreFsSpec extends GraftFunSuite {
 
@@ -26,23 +26,23 @@ class StoreFsSpec extends GraftFunSuite {
       conf.unset("fs.s3a.impl")
       conf.unset("fs.mockeventual.impl")
       conf.unset("fs.mockdfs.impl")
-      conf.unset(GraftSimilarity.StoreFsForceKey)
+      conf.unset(ImpactIndex.StoreFsForceKey)
       org.apache.hadoop.fs.FileSystem.closeAll()
     }
   }
 
-  private def smallIndex() = {
-    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
-      .select(col("vec_id"),
-              expr("transform(embedding, x -> cast(x AS double))").as("v"))
-    (GraftSimilarity.buildIvfIndex(e.filter(col("vec_id") < 40)),
-     e.filter(col("vec_id").between(40, 59)))
-  }
+  private def docs() = spark.read.parquet(s"$sf0001/documents.parquet")
+    .select(col("doc_id"), col("text"))
+
+  private val terms = Seq("the", "data", "of")
+
+  private def serve(dir: String) =
+    ImpactIndex.bm25TopKStored(ImpactIndex.read(spark, dir), terms, k = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("store mutators refuse object-store / eventually-listed / unknown " +
        "filesystems with the documented reason; reads stay ungated") {
     withMockFs {
-      val (idx, batch) = smallIndex()
       val base = java.nio.file.Files.createTempDirectory("fs_contract").toString
       try {
         val cases = Seq(
@@ -51,44 +51,23 @@ class StoreFsSpec extends GraftFunSuite {
           "mockdfs" -> "known rename-atomic set")
         for ((scheme, reason) <- cases) {
           val dir = s"$scheme:$base/store_$scheme"
-          // store creation refuses
-          val eW = intercept[GraftSimilarity.StoreFsContractViolation] {
-            GraftSimilarity.writeIvfIndex(idx, dir)
+          val eW = intercept[ImpactIndex.StoreFsContractViolation] {
+            ImpactIndex.write(docs(), dir, buckets = 8)
           }
           assert(eW.getMessage.contains(reason), s"$scheme: ${eW.getMessage}")
-          assert(eW.getMessage.contains(GraftSimilarity.StoreFsForceKey),
+          assert(eW.getMessage.contains(ImpactIndex.StoreFsForceKey),
             "the refusal must name the documented override")
-          // both append paths refuse before touching anything
-          intercept[GraftSimilarity.StoreFsContractViolation] {
-            GraftSimilarity.appendIvfStore(spark, dir, batch)
-          }
-          intercept[GraftSimilarity.StoreFsContractViolation] {
-            GraftSimilarity.appendIvfStore(spark, dir, batch,
-                                           batchTag = Some("t1"))
-          }
-          // compaction refuses BEFORE taking (or even checking) the lease
-          intercept[GraftSimilarity.StoreFsContractViolation] {
-            GraftSimilarity.compactIvfCells(spark, dir, 2)
-          }
           assert(!new java.io.File(s"$base/store_$scheme").exists(),
             "a refused mutation must leave nothing behind")
         }
-        // a local-FS store still mutates freely (the allowlisted path)
+        // a local-FS store still writes freely (the allowlisted path)
         val localDir = s"$base/store_local"
-        GraftSimilarity.writeIvfIndex(idx, localDir)
-        GraftSimilarity.appendIvfStore(spark, localDir, batch)
+        ImpactIndex.write(docs(), localDir, buckets = 8)
         // READS stay ungated: serve the same store THROUGH the s3a mock
         // scheme (an immutable snapshot on an object store is a
         // supported serving posture)
-        val q = batch.limit(3)
-          .select(col("vec_id").as("q_id"), col("v").as("qv"))
-        val viaLocal = GraftSimilarity
-          .ivfTopKWith(GraftSimilarity.readIvfIndex(spark, localDir), q, k = 3)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-        val viaS3 = GraftSimilarity
-          .ivfTopKWith(GraftSimilarity.readIvfIndex(spark, s"s3a:$localDir"),
-                       q, k = 3)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        val viaLocal = serve(localDir)
+        val viaS3 = serve(s"s3a:$localDir")
         assert(viaS3 == viaLocal && viaS3.nonEmpty,
           s"read-only serving through the object-store scheme must work: " +
           s"s3=${viaS3.size} local=${viaLocal.size}")
@@ -97,34 +76,20 @@ class StoreFsSpec extends GraftFunSuite {
     }
   }
 
-  test("the force flag is the documented degraded mode: the full store " +
-       "lifecycle (create, tagged append, compact, serve) runs through a " +
-       "foreign scheme end-to-end") {
+  test("the force flag is the documented degraded mode: the impact " +
+       "store's write and serve run through a foreign scheme end-to-end") {
     withMockFs {
-      val conf = spark.sparkContext.hadoopConfiguration
-      conf.setBoolean(GraftSimilarity.StoreFsForceKey, true)
-      val (idx, batch) = smallIndex()
       val base = java.nio.file.Files.createTempDirectory("fs_forced").toString
       try {
+        val localDir = s"$base/store_local"
+        ImpactIndex.write(docs(), localDir, buckets = 8)
+        spark.sparkContext.hadoopConfiguration
+          .setBoolean(ImpactIndex.StoreFsForceKey, true)
         val dir = s"s3a:$base/store_forced"
-        GraftSimilarity.writeIvfIndex(idx, dir)
-        GraftSimilarity.appendIvfStore(spark, dir, batch,
-                                       batchTag = Some("forced_b0"))
-        // replay is still marker-gated through the foreign scheme
-        GraftSimilarity.appendIvfStore(spark, dir, batch,
-                                       batchTag = Some("forced_b0"))
-        assert(GraftSimilarity.compactIvfCells(spark, dir, 1) >= 0)
-        val q = batch.limit(3)
-          .select(col("vec_id").as("q_id"), col("v").as("qv"))
-        val viaStore = GraftSimilarity
-          .ivfTopKWith(GraftSimilarity.readIvfIndex(spark, dir), q, k = 3)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-        val viaMem = GraftSimilarity
-          .ivfTopKWith(GraftSimilarity.ivfAppend(idx, batch), q, k = 3)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-        assert(viaStore == viaMem && viaStore.nonEmpty,
-          "forced mode must serve identically to the in-memory append " +
-          "(no double-landed replay rows)")
+        ImpactIndex.write(docs(), dir, buckets = 8)
+        val viaForced = serve(dir)
+        assert(viaForced == serve(localDir) && viaForced.nonEmpty,
+          "forced mode must serve identically to the allowlisted store")
       } finally org.apache.commons.io.FileUtils
         .deleteDirectory(new java.io.File(base))
     }

@@ -1891,13 +1891,13 @@ class StreamingSpec extends GraftFunSuite {
           s"stream-only=${streamed.diff(batchServe)} " +
           s"batch-only=${batchServe.diff(streamed)}")
       } finally q.stop()
-      // the same stream served against the AT-REST store (readIvfIndex
-      // frames re-scanned per micro-batch) answers identically
+      // the same stream served against the AT-REST store (IvfObjectStore
+      // .read frames re-scanned per micro-batch) answers identically
       val dir = java.nio.file.Files.createTempDirectory("ivf_serve_store")
         .toString
       try {
-        GraftSimilarity.writeIvfIndex(idx, dir)
-        val stored = GraftSimilarity.readIvfIndex(spark, dir)
+        graft.operators.IvfObjectStore.create(spark, idx, dir)
+        val stored = graft.operators.IvfObjectStore.read(spark, dir)
         val input2 = MemoryStream[(Long, Timestamp, List[Double])]
         val q2 = CorpusStreams
           .ivfServeStream(stored, input2.toDF().toDF("q_id", "ts", "qv"),

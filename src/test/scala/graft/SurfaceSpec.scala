@@ -59,15 +59,59 @@ class SurfaceSpec extends GraftFunSuite {
   }
 
   test("reference demo parquet reads with the documented all-types schema") {
-    // the reference's own 8-row demo file (examples/datafusion.rs:26)
-    val df = spark.read.parquet("/root/reference/data/part_0.parquet")
-    assert(df.count() == 8)
-    assert(df.columns.contains("timestamp_col"))
-    val sampled = {
-      import graft.implicits._
-      df.sampleExt(1.0, Some(1L))
+    // the reference's 8-row all-types demo table (FIXTURES.md §1),
+    // generated here: ids 0-7, even id -> true/0/"0", odd id -> false/1/"1",
+    // minute-aligned timestamps 2009-0{1..4}-01 00:0{0,1}:00
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val expected = StructType(Seq(
+      StructField("id", IntegerType),
+      StructField("bool_col", BooleanType),
+      StructField("tinyint_col", IntegerType),
+      StructField("smallint_col", IntegerType),
+      StructField("int_col", IntegerType),
+      StructField("bigint_col", LongType),
+      StructField("float_col", FloatType),
+      StructField("double_col", DoubleType),
+      StructField("date_string_col", BinaryType),
+      StructField("string_col", BinaryType),
+      StructField("timestamp_col", TimestampType)))
+    val rows = (0 until 8).map { id =>
+      val odd = id % 2
+      Row(id, odd == 0, odd, odd, odd, odd * 10L, odd * 1.1f, odd * 10.1,
+          f"0${id / 2 + 1}/01/09".getBytes("UTF-8"),
+          odd.toString.getBytes("UTF-8"),
+          Timestamp.valueOf(f"2009-0${id / 2 + 1}-01 00:0$odd:00"))
     }
-    assert(sampled.count() == 8)
+    val dir = java.nio.file.Files.createTempDirectory("all_types").toString
+    try {
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), expected)
+        .write.mode("overwrite").parquet(s"$dir/part_0.parquet")
+      val df = spark.read.parquet(s"$dir/part_0.parquet")
+      assert(df.count() == 8)
+      assert(df.columns.contains("timestamp_col"))
+      assert(df.schema.map(f => f.name -> f.dataType) ==
+               expected.map(f => f.name -> f.dataType),
+        s"all 11 columns with their Spark types, got ${df.schema}")
+      val got = df.select(col("id"), col("bool_col"), col("tinyint_col"),
+                          col("smallint_col"), col("int_col"),
+                          col("string_col").cast("string"))
+        .collect().sortBy(_.getInt(0))
+      assert(got.map(_.getInt(0)).toSeq == (0 until 8))
+      for (r <- got) {
+        val odd = r.getInt(0) % 2
+        assert(r.getBoolean(1) == (odd == 0) && r.getInt(2) == odd &&
+               r.getInt(3) == odd && r.getInt(4) == odd &&
+               r.getString(5) == odd.toString,
+          s"even/odd pattern broken at $r")
+      }
+      val sampled = {
+        import graft.implicits._
+        df.sampleExt(1.0, Some(1L))
+      }
+      assert(sampled.count() == 8)
+    } finally org.apache.commons.io.FileUtils
+      .deleteDirectory(new java.io.File(dir))
   }
 
   test("ANALYZE TABLE statistics feed the catalog (CBO vocabulary)") {

@@ -5,14 +5,13 @@ import java.net.URI
 import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** Test-only Hadoop filesystems for StoreFsSpec: each is the LOCAL
-  * filesystem wearing a different scheme, so the at-rest store's
-  * filesystem-contract gate can be exercised against object-store /
-  * eventually-consistent / unknown schemes without any real remote
-  * storage. Registered per-test via `fs.<scheme>.impl` in the Hadoop
-  * conf. Because the bytes land on local disk, the FORCED (degraded)
-  * mode can run the full store lifecycle end-to-end through the foreign
-  * scheme.
+/** Test-only Hadoop filesystems for StoreFsSpec and ManifestStoreSpec:
+  * each is the LOCAL filesystem wearing a different scheme, so the
+  * rename-committed store's filesystem-contract gate can be exercised
+  * against object-store / eventually-consistent / unknown schemes without
+  * any real remote storage, and the manifest stores can run their whole
+  * lifecycle through an object-store scheme. Registered per-test via
+  * `fs.<scheme>.impl` in the Hadoop conf.
   *
   * File statuses are rebuilt with explicit permissions:
   * RawLocalFileSystem's deprecated lazy permission loader does
