@@ -29,7 +29,8 @@ object ProbePhases {
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().collect()
-    import graft.operators.{GraftSimilarity, HybridRetrieval, IvfObjectStore}
+    import graft.operators.{GraftSimilarity, HybridRetrieval, IvfObjectStore,
+                            ScoringTier}
 
     def phase[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()
@@ -65,9 +66,9 @@ object ProbePhases {
           IvfObjectStore.create(spark, idx, out, pq = Some(cbM))
         }
         val served = phase("serve construction") {
-          GraftPq.ivfPqTopKWithCw(IvfObjectStore.read(spark, out),
-                                  GraftPq.readPqCodebook(spark, out), qb,
-                                  k = 5, nprobe = 4, rerankFactor = 4)
+          GraftSimilarity.ivfTopKWith(
+            IvfObjectStore.read(spark, out), qb, k = 5, nprobe = 4,
+            tier = ScoringTier.Pq(GraftPq.readPqCodebook(spark, out)))
         }
         phase("serve execution (noop)") {
           served.write.format("noop").mode("overwrite").save()
@@ -158,15 +159,17 @@ object ProbePhases {
             IvfObjectStore.read(spark, out)
           }
           val sem = phase("sem leg construction") {
-            GraftSimilarity.ivfTopKWithB1(stored,
-              queries.select(col("q_id"), col("qv")), 30, 4, 4)
+            GraftSimilarity.ivfTopKWith(stored,
+              queries.select(col("q_id"), col("qv")), 30, 4,
+              tier = ScoringTier.B1(4))
           }
           phase("sem leg exec (noop)") {
             sem.write.format("noop").mode("overwrite").save()
           }
           val served = phase("serve construction") {
-            HybridRetrieval.hybridTopKWithB1(stored, docs, queries,
-              k = 10, kCand = 30, rrfK = 60, nprobe = 4, rerankFactor = 4)
+            HybridRetrieval.hybridTopKWith(stored, docs, queries,
+              k = 10, kCand = 30, rrfK = 60, nprobe = 4,
+              tier = ScoringTier.B1(4))
           }
           phase("serve execution (noop)") {
             served.write.format("noop").mode("overwrite").save()
@@ -326,17 +329,18 @@ object ProbePhases {
       }
       phase("q.count()") { queries.count() }
       val sem = phase("sem leg construction") {
-        GraftSimilarity.ivfTopKWithQ8(stored,
+        GraftSimilarity.ivfTopKWith(stored,
           queries.select(col("q_id"), col("qv")), k = 30,
-          nprobe = 4, rerankFactor = 4)
+          nprobe = 4, tier = ScoringTier.Q8(4))
       }
       phase("sem leg exec (noop)") {
         sem.write.format("noop").mode("overwrite").save()
       }
       val served = phase("serve plan construction") {
-        HybridRetrieval.hybridTopKWithQ8(
+        HybridRetrieval.hybridTopKWith(
           stored, docs, queries,
-          k = 10, kCand = 30, rrfK = 60, nprobe = 4, rerankFactor = 4)
+          k = 10, kCand = 30, rrfK = 60, nprobe = 4,
+          tier = ScoringTier.Q8(4))
       }
       phase("serve execution (noop)") {
         served.write.format("noop").mode("overwrite").save()

@@ -239,6 +239,22 @@ object GraftPq {
         cb.m * cb.ksub)).as("__lut"): _*)
   }
 
+  /** The ADC cosine of the code word column `cw` on a row that also
+    * carries the query's dot LUT (`__lut`), its exact grid norm (`__qn`)
+    * and the codeword-norm LUT (`__nlut`, [[normLutRow]]): m byte-lookups
+    * per LUT, exact integer sums — replayed bit-for-bit by the SQL
+    * oracles. A zero norm on either side scores 0. With `ifNull` a null
+    * code word fails with that message instead of being scored. */
+  private[graft] def adcCosine(cw: String,
+                               ifNull: Option[String] = None): Column = {
+    val guard = ifNull.fold("")(msg =>
+      s"WHEN isnull($cw) THEN cast(assert_true(false, '$msg') AS double) ")
+    expr(s"""CASE ${guard}WHEN __qn = 0D OR graft_pq_adc($cw, __nlut) = 0D
+            |THEN 0D
+            |ELSE graft_pq_adc($cw, __lut)
+            |     / sqrt(__qn * graft_pq_adc($cw, __nlut)) END""".stripMargin)
+  }
+
   /** Stage 1 + 2 of every PQ serve: ADC-score (q_id, n_id, __cw, __lut,
     * __qn) candidate pairs (m byte-lookups each — exact integer sums,
     * replayed bit-for-bit by the SQL oracles), cut to k·rerankFactor
@@ -250,11 +266,7 @@ object GraftPq {
                              k: Int, kk: Int): DataFrame = {
     val cand = pairs
       .crossJoin(normLutRow(cb))
-      .select(col("q_id"), col("n_id"), expr(
-        """CASE WHEN __qn = 0D OR graft_pq_adc(__cw, __nlut) = 0D THEN 0D
-          |ELSE graft_pq_adc(__cw, __lut)
-          |     / sqrt(__qn * graft_pq_adc(__cw, __nlut)) END""".stripMargin)
-        .as("ac"))
+      .select(col("q_id"), col("n_id"), adcCosine("__cw").as("ac"))
       .groupBy("q_id")
       .agg(expr(s"graft_topk(ac, n_id, $kk)").as("tk"))
       .select(col("q_id"), explode(col("tk")).as("s"))
@@ -471,77 +483,17 @@ object GraftPq {
       .unionByName(withCw(cb, base.filter(col("cw").isNull).drop("cw")))
   }
 
-  /** Serve top-k from ANY cw-carrying index + codebook pair — an
-    * at-rest PQ store ([[graft.operators.IvfObjectStore.read]] +
-    * [[readPqCodebook]] over a store created with `pq = Some(cb)`) or
-    * an in-memory composition. Probe the query's `nprobe` nearest cells,
-    * ADC-score the probed cells' members off the `cw` column — on a
-    * store the stage-1 scan ships (n_id, c_id, m bytes) and column
-    * pruning keeps the doubles (and the q8 bytes) out entirely — then
-    * exact-rerank the k·rerankFactor survivors, fetching ONLY their full
-    * vectors through the literal `n_id IN (...)` pushdown that prunes
-    * row groups on the n_id-sorted cell files (the
-    * [[GraftSimilarity.ivfTopKWithQ8]] stage-2 shape). `rerankFactor` is
-    * the recall knob — size it with [[pqAutoBudget]], not the default
-    * (see [[pqTopK]]'s budget warning). */
+  /** [[GraftSimilarity.ivfTopKWith]] at [[ScoringTier.Pq]] over ANY
+    * cw-carrying index — an at-rest PQ store ([[IvfObjectStore.read]] +
+    * [[readPqCodebook]]) or an in-memory composition. */
   def ivfPqTopKWithCw(index: GraftSimilarity.IvfIndex, cb0: PqCodebook,
                       queries: DataFrame, k: Int,
                       nprobe: Int = 4, rerankFactor: Int = 4,
                       qIdCol: String = "q_id", qVecCol: String = "qv",
                       where: Option[Column] = None)
-      : DataFrame = {
-    require(k >= 1, s"ivfPqTopKWithCw: k must be >= 1, got $k")
-    require(nprobe >= 1,
-      s"ivfPqTopKWithCw: nprobe must be >= 1, got $nprobe")
-    require(rerankFactor >= 1,
-      s"ivfPqTopKWithCw: rerankFactor must be >= 1, got $rerankFactor")
-    val spark = queries.sparkSession
-    graft.GraftSession.ensureExtensions(spark)
-    require(index.assigned.columns.contains("cw"),
-      "ivfPqTopKWithCw: index has no cw column — write the store with " +
-      "IvfObjectStore.create(…, pq = Some(cb)), or compact a pre-PQ " +
-      "store with its codebook present to migrate in place")
-    val cb = materialize(cb0)
-    // persist the minibatch projection: the PQ serve evaluates it at
-    // least four times — the qlutFrame join side, the survivor-fetch
-    // collect, the |Q| count, and the final rerank broadcast — and the
-    // caller's derivation is often a corpus join (guide §1.2 fewer
-    // passes; the ivfTopKQuant/qBatch precedent). Lazy; streaming
-    // frames pass through untouched.
-    val q = queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv"))
-    if (!q.isStreaming) q.persist()
-    val probes = GraftSimilarity.probeCells(q, index.centroids, nprobe,
-                                            Seq("q_id", "qv"))
-    val probeLut = broadcast(probes.select(col("q_id"), col("c_id"))
-      .join(qlutFrame(cb, q), "q_id"))
-    val kk = k * rerankFactor
-    // metadata-filtered PQ serve: the predicate cuts the candidate scan
-    // BEFORE the ADC scoring — same placement/pushdown story as
-    // ivfTopKWith(where) (the filter makes the quantized stage cheaper,
-    // and the survivors inherit it, so stage 2 needs no re-filter)
-    val scan0 = where.fold(index.assigned)(index.assigned.filter(_))
-    val cand = scan0.select(col("n_id"), col("c_id"), col("cw"))
-      .join(probeLut, "c_id")
-      .filter(col("n_id") =!= col("q_id"))
-      .crossJoin(normLutRow(cb))
-      .select(col("q_id"), col("n_id"), expr(
-        """CASE WHEN isnull(cw) THEN cast(assert_true(false,
-          |  'ivfPqTopKWithCw: null cw — mixed-generation cell files;
-          |   compact the store (codebook present) to migrate') AS double)
-          |WHEN __qn = 0D OR graft_pq_adc(cw, __nlut) = 0D THEN 0D
-          |ELSE graft_pq_adc(cw, __lut)
-          |     / sqrt(__qn * graft_pq_adc(cw, __nlut)) END""".stripMargin)
-        .as("ac"))
-      .groupBy("q_id")
-      .agg(expr(s"graft_topk(ac, n_id, $kk)").as("tk"))
-      .select(col("q_id"), explode(col("tk.id")).as("n_id"))
-    // rerank fetch gated in |Q|·k·rerankFactor: literal `n_id IN (...)`
-    // row-group-pruned fetch below the gate, broadcast-join fetch past it
-    // (GraftSimilarity.survivorRerank — the q8 tier's exact stage-2)
-    GraftSimilarity.survivorRerank(
-      cand, index.assigned.select(col("n_id"), col("v")), q, k,
-      q.count() * kk)
-  }
+      : DataFrame =
+    GraftSimilarity.ivfTopKWith(index, queries, k, nprobe, qIdCol, qVecCol,
+                                where, ScoringTier.Pq(cb0, rerankFactor))
 
   /** Recall of the PQ tier against exact truth across a rerank-budget
     * SWEEP over ONE trained/encoded codebook — the
@@ -593,11 +545,7 @@ object GraftPq {
       .crossJoin(broadcast(qlutFrame(cb, q)))
       .filter(col("n_id") =!= col("q_id"))
       .crossJoin(normLutRow(cb))
-      .select(col("q_id"), col("n_id"), expr(
-        """CASE WHEN __qn = 0D OR graft_pq_adc(__cw, __nlut) = 0D THEN 0D
-          |ELSE graft_pq_adc(__cw, __lut)
-          |     / sqrt(__qn * graft_pq_adc(__cw, __nlut)) END""".stripMargin)
-        .as("ac"))
+      .select(col("q_id"), col("n_id"), adcCosine("__cw").as("ac"))
       .groupBy("q_id")
       .agg(expr(s"graft_topk(ac, n_id, $kkMax)").as("tk"))
       .select(col("q_id"), posexplode(col("tk")).as(Seq("p", "s")))

@@ -491,27 +491,28 @@ object GraftSimilarity {
     }
   }
 
-  /** Fail fast on a non-integral id column: the at-rest layout
-    * ([[IvfObjectStore]]) partitions by c_id and its read pins the long
-    * contract with a cast — a store written with string/decimal ids
-    * would read back all-null c_id and [[ivfTopKWith]] would silently
-    * serve zero rows (ADVICE r5). Checked at build/append time, not
-    * discovered at read time. Width is then NORMALIZED to long in the
-    * projection right after this check (ADVICE r6): blessing byte/short/
-    * int/long here but writing the native width would let a store built
-    * with int ids and appended with long ids hold parquet files with
-    * different n_id schemas in one snapshot — mergeSchema=false reads
-    * pick one footer and fail (or mis-width) at read time, the exact late
-    * failure this guard exists to prevent.
+  /** Fail fast on a non-integral id column: every index and store keys
+    * rows by a long `n_id` cast from the caller's id — a fractional id
+    * would truncate (ids 1.5 and 1.7 both become 1, silently merging two
+    * rows or deleting the wrong one) and a non-numeric string fails the
+    * cast mid-job (ADVICE r5). Checked before any work at build, append
+    * and delete time, not discovered later. Width is then NORMALIZED to
+    * long in the projection right after this check (ADVICE r6): blessing
+    * byte/short/int/long here but writing the native width would let a
+    * store built with int ids and appended with long ids hold parquet
+    * files with different n_id schemas in one snapshot —
+    * mergeSchema=false reads pick one footer and fail (or mis-width) at
+    * read time, the exact late failure this guard exists to prevent.
     */
-  private def requireIntegralId(df: DataFrame, c: String, ctx: String): Unit = {
+  private[operators] def requireIntegralId(df: DataFrame, c: String,
+                                           ctx: String): Unit = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val dt = df.schema(c).dataType
     require(dt == ByteType || dt == ShortType || dt == IntegerType ||
             dt == LongType,
-      s"$ctx: id column '$c' must be integral (byte/short/int/long) — the " +
-      s"cell-partitioned store round-trips it through a long cast, and a " +
-      s"${dt.simpleString} id would read back null and serve zero rows")
+      s"$ctx: id column '$c' must be integral (byte/short/int/long) — " +
+      s"rows are keyed by a long cast of it, and a ${dt.simpleString} id " +
+      "would truncate or fail the cast")
   }
 
   /** Build the IVF index for [[ivfTopKWith]]: pick ≈√N deterministic
@@ -544,7 +545,7 @@ object GraftSimilarity {
       s"buildIvfIndex: metaCols may not shadow layout columns " +
       s"(${LayoutCols.mkString(", ")})")
     // metadata rides beside the vectors from here on: through assignTo,
-    // into the cell files (IvfObjectStore.storedLayout passes it
+    // into the cell files (IvfObjectStore.stageAssigned passes it
     // through), and back out of IvfObjectStore.read — the filter columns
     // of a `where` serve
     val e = collection.select(
@@ -619,7 +620,7 @@ object GraftSimilarity {
     * an assigned frame is caller METADATA riding beside the vectors
     * (label, lang, source …) — the filter columns of
     * [[ivfTopKWith]]'s `where` predicate. [[assignTo]] and
-    * `IvfObjectStore.storedLayout` pass metadata through untouched,
+    * `IvfObjectStore.stageAssigned` pass metadata through untouched,
     * so it lands in the cell files and the predicate pushes down to the
     * at-rest scan. */
   private[operators] val LayoutCols: Set[String] =
@@ -667,22 +668,11 @@ object GraftSimilarity {
     val e = batch.select(
       col(idCol).cast("long").as("n_id") +: col(vecCol).as("v") +:
         meta.map(col): _*)
-    val add0 = assignTo(index.centroids, e)
     // a quantized-carrying base (a read store) keeps its serving columns
     // whole: the appended rows quantize inline so every tier stays
     // servable
-    val add1 =
-      if (index.assigned.columns.contains("q8"))
-        add0.withColumn("q8", expr("graft_q8b(v)"))
-      else add0
-    val add2 =
-      if (index.assigned.columns.contains("q4"))
-        add1.withColumn("q4", expr("graft_q4b(v)"))
-      else add1
-    val add =
-      if (index.assigned.columns.contains("b1"))
-        add2.withColumn("b1", expr("graft_b1b(v)"))
-      else add2
+    val add = ScoringTier.encodeMissing(assignTo(index.centroids, e),
+      ScoringTier.Scalars.filter(t => index.assigned.columns.contains(t.column)))
     IvfIndex(index.centroids, index.assigned.unionByName(add))
   }
 
@@ -962,41 +952,109 @@ object GraftSimilarity {
     * parity), but the collection-side assign is NOT recomputed, so a
     * served query batch costs |Q|·√N probe cosines + the probed cells'
     * rerank, independent of how many batches came before.
+    *
+    * `tier` picks how the probed candidates are scored
+    * ([[ScoringTier]]): [[ScoringTier.Exact]] is the one-stage serve
+    * above; a compressed tier scores off its at-rest column (which
+    * `index.assigned` must carry), cuts k·`rerankFactor` per query and
+    * exact-reranks only those survivors, whose vectors are fetched
+    * through a LITERAL `n_id IN (...)` predicate that reaches the
+    * parquet scan (PushedFilters — spec-pinned; row-group stats on the
+    * n_id-sorted cell files prune the fetch) below
+    * [[SurvivorFetchMaxLiterals]] and a broadcast join past it. Same
+    * output contract, exact cosines.
     */
   def ivfTopKWith(index: IvfIndex, queries: DataFrame, k: Int,
                   nprobe: Int = 4,
                   qIdCol: String = "q_id", qVecCol: String = "qv",
-                  where: Option[Column] = None)
-      : DataFrame = {
+                  where: Option[Column] = None,
+                  tier: ScoringTier = ScoringTier.Exact)
+      : DataFrame = tier match {
+    case t: ScoringTier.Compressed =>
+      twoStageTopK(index, queries, k, nprobe, qIdCol, qVecCol, where, t)
+    case ScoringTier.Exact =>
+      graft.GraftSession.ensureExtensions(queries.sparkSession)
+      val q = queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv"))
+      val probes = probeCells(q, index.centroids, nprobe, Seq("q_id", "qv"))
+      // METADATA-FILTERED serve: the predicate lands on the assigned scan
+      // BEFORE the probe join, so on an at-rest store it pushes down to
+      // the parquet reader (PushedFilters on the metadata column — plan-
+      // pinned) and COMPOSES with the DPP cell pruning: files pruned to
+      // the probed cells, row groups pruned by the predicate's min/max
+      // stats. Semantics: top-k over the filtered population, same probe
+      // set as the unfiltered serve (cells are probed by query-centroid
+      // distance, which ignores the filter) — a highly selective filter
+      // can starve probed cells, so widen nprobe as selectivity grows
+      // (recallAtKWith measures the trade on your data).
+      val cand = where.fold(index.assigned)(index.assigned.filter(_))
+      // The probe side is |Q|·nprobe skinny rows — broadcast-small by
+      // DESIGN at any store size (the serving contract bounds the batch;
+      // split oversized offline batches), exactly like
+      // [[bruteForceTopK]]'s query block. The explicit hint is
+      // LOAD-BEARING for the at-rest layout: with probes as the broadcast
+      // build side, dynamic partition pruning REUSES that broadcast to
+      // filter the assigned scan down to the probed cells' files. Left to
+      // size estimates, a small store gets broadcast itself and the DPP
+      // filter degenerates to `true` at runtime (reuseBroadcastOnly) —
+      // every file read; and the crossJoin-inflated stats of the probe
+      // DAG can flip it to a shuffle join, which breaks the
+      // broadcast-reuse DPP the same way. OperatorLibSpec pins numFiles
+      // ≤ probed cells — the I/O fact, not just the plan shape.
+      topK(broadcast(probes).join(cand, "c_id")
+             .filter(col("n_id") =!= col("q_id"))
+             .select(col("q_id"), col("n_id"), cosine("qv", "v").as("c")), k)
+  }
+
+  /** [[ivfTopKWith]] at [[ScoringTier.Q4]]. */
+  def ivfTopKWithQ4(index: IvfIndex, queries: DataFrame, k: Int,
+                    nprobe: Int = 4, rerankFactor: Int = 4,
+                    qIdCol: String = "q_id", qVecCol: String = "qv",
+                    where: Option[Column] = None)
+      : DataFrame =
+    ivfTopKWith(index, queries, k, nprobe, qIdCol, qVecCol, where,
+                ScoringTier.Q4(rerankFactor))
+
+  /** The serve of every compressed tier: the tier's stage-1 candidate
+    * scoring, the k·rerankFactor `graft_topk` cut, then the |Q|-gated
+    * exact rerank ([[survivorRerank]]). */
+  private def twoStageTopK(index: IvfIndex, queries: DataFrame, k: Int,
+                           nprobe: Int, qIdCol: String, qVecCol: String,
+                           where: Option[Column],
+                           tier: ScoringTier.Compressed): DataFrame = {
+    require(k >= 1, s"ivfTopKWith: k must be >= 1, got $k")
+    require(nprobe >= 1, s"ivfTopKWith: nprobe must be >= 1, got $nprobe")
+    require(tier.rerankFactor >= 1,
+      s"ivfTopKWith: rerankFactor must be >= 1, got ${tier.rerankFactor}")
+    require(index.assigned.columns.contains(tier.column), tier.missingColumn)
     graft.GraftSession.ensureExtensions(queries.sparkSession)
+    // persist the (serving-contract-bounded) minibatch projection: a
+    // two-stage serve evaluates it at least three times — the |Q| count
+    // below, the survivor-fetch collect of `cand` (whose probe side
+    // embeds it), and the final rerank plan's broadcast(q); the PQ tier's
+    // LUT join adds a fourth — and the caller's derivation is often a
+    // corpus join (guide §1.2 fewer passes; r17 ProbePhases). Lazy;
+    // streaming frames pass through.
     val q = queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv"))
+    if (!q.isStreaming) q.persist()
     val probes = probeCells(q, index.centroids, nprobe, Seq("q_id", "qv"))
-    // METADATA-FILTERED serve: the predicate lands on the assigned scan
-    // BEFORE the probe join, so on an at-rest store it pushes down to
-    // the parquet reader (PushedFilters on the metadata column — plan-
-    // pinned) and COMPOSES with the DPP cell pruning: files pruned to
-    // the probed cells, row groups pruned by the predicate's min/max
-    // stats. Semantics: top-k over the filtered population, same probe
-    // set as the unfiltered serve (cells are probed by query-centroid
-    // distance, which ignores the filter) — a highly selective filter
-    // can starve probed cells, so widen nprobe as selectivity grows
-    // (recallAtKWith measures the trade on your data).
-    val cand = where.fold(index.assigned)(index.assigned.filter(_))
-    // The probe side is |Q|·nprobe skinny rows — broadcast-small by DESIGN
-    // at any store size (the serving contract bounds the batch; split
-    // oversized offline batches), exactly like [[bruteForceTopK]]'s query
-    // block. The explicit hint is LOAD-BEARING for the at-rest layout:
-    // with probes as the broadcast build side, dynamic partition pruning
-    // REUSES that broadcast to filter the assigned scan down to the probed
-    // cells' files. Left to size estimates, a small store gets broadcast
-    // itself and the DPP filter degenerates to `true` at runtime
-    // (reuseBroadcastOnly) — every file read; and the crossJoin-inflated
-    // stats of the probe DAG can flip it to a shuffle join, which breaks
-    // the broadcast-reuse DPP the same way. OperatorLibSpec pins numFiles
-    // ≤ probed cells — the I/O fact, not just the plan shape.
-    topK(broadcast(probes).join(cand, "c_id")
-           .filter(col("n_id") =!= col("q_id"))
-           .select(col("q_id"), col("n_id"), cosine("qv", "v").as("c")), k)
+    val kk = k * tier.rerankFactor
+    // the metadata predicate filters the candidate scan BEFORE the
+    // compressed cut (same placement as the exact serve: pushed to the
+    // at-rest reader, composing with DPP; the survivors inherit it, so
+    // stage 2 needs no re-filter); the metadata column joins the pruned
+    // column set only when a filter needs it
+    val scored = tier.score(q, probes,
+                            where.fold(index.assigned)(index.assigned.filter(_)))
+    val cand = scored
+      .groupBy("q_id")
+      .agg(expr(s"graft_topk(${scored.columns(2)}, n_id, $kk)").as("tk"))
+      .select(col("q_id"), explode(col("tk.id")).as("n_id"))
+    // stage 2, gated in |Q|·k·rerankFactor: literal `n_id IN (...)`
+    // row-group-pruned fetch below the gate, broadcast-join fetch past it
+    // (see survivorRerank / SurvivorFetchMaxLiterals). |Q| costs one count
+    // over the (bounded by the serving contract) query batch.
+    survivorRerank(cand, index.assigned.select(col("n_id"), col("v")),
+                   q, k, q.count() * kk)
   }
 
   /** Candidate-row gate below which the quantized serves' survivor fetch
@@ -1021,8 +1079,8 @@ object GraftSimilarity {
     spark.conf.getOption("spark.graft.survivorFetchMaxLiterals")
       .map(_.toLong).getOrElse(SurvivorFetchMaxLiterals)
 
-  /** Stage 2 of every quantized serve (q8 and PQ): exact-rerank the
-    * quantized cut's survivors `cand` (q_id, n_id) through the original
+  /** Stage 2 of every compressed-tier serve ([[ScoringTier]]): exact-rerank
+    * the compressed cut's survivors `cand` (q_id, n_id) through the original
     * vectors in `source` (n_id, v), cut to top-k per query. Gated in
     * `boundRows` (the caller's |Q|·k·rerankFactor bound) between the
     * literal-pushdown fetch and the broadcast-join fetch — the two paths
@@ -1052,171 +1110,6 @@ object GraftSimilarity {
       topK(broadcast(cand).join(fetched, "n_id").join(broadcast(q), "q_id")
              .select(col("q_id"), col("n_id"), cosine("qv", "v").as("c")), k)
     }
-  }
-
-  /** Attach the q8 serving column to an in-memory index (the store
-    * writes it at rest — `IvfObjectStore.storedLayout`); for parity
-    * tests and in-flight q8 serving where no store exists. */
-  def q8Augment(index: IvfIndex): IvfIndex =
-    IvfIndex(index.centroids,
-             index.assigned.withColumn("q8", expr("graft_q8b(v)")))
-
-  /** [[q8Augment]]'s int4 sibling — attach the nibble-packed q4 serving
-    * column for in-flight serving through [[ivfTopKWithQ4]]. */
-  def q4Augment(index: IvfIndex): IvfIndex =
-    IvfIndex(index.centroids,
-             index.assigned.withColumn("q4", expr("graft_q4b(v)")))
-
-  /** [[q8Augment]]'s 1-bit sibling — attach the sign-packed b1 serving
-    * column for in-flight serving through [[ivfTopKWithB1]]. */
-  def b1Augment(index: IvfIndex): IvfIndex =
-    IvfIndex(index.centroids,
-             index.assigned.withColumn("b1", expr("graft_b1b(v)")))
-
-  /** [[ivfTopKWith]] through the QUANTIZED candidate tier — the serve
-    * path whose I/O is sized for a 100-TB store: candidates in the
-    * probed cells are scored with `graft_q8b_cos` off the store's `q8`
-    * column (ONE signed byte per component, packed binary, vs 8·dim
-    * bytes of doubles — the full 8× cut, not the ~2× an `array<int>`
-    * encoding would leave on the table), the top
-    * k·`rerankFactor` per query are reranked with exact cosine, and only
-    * THOSE survivors' full vectors are fetched. Output contract matches
-    * [[ivfTopKWith]] (q_id, n_id, rnk, cos with exact cosines); the
-    * quantized stage is a recall trade bounded by `rerankFactor` — with
-    * it covering the probed population the result is exactly
-    * [[ivfTopKWith]]'s (SimilaritySpec pins it).
-    *
-    * The survivor fetch COLLECTS the candidate (q_id, n_id) pairs — a
-    * driver materialization bounded by |Q|·k·rerankFactor, the same
-    * serving-batch contract that lets the probe side broadcast — so the
-    * exact-vector read carries a LITERAL `n_id IN (...)` predicate that
-    * reaches the parquet scan (PushedFilters — spec-pinned): with the
-    * store's n_id-sorted cell files, row-group min/max stats prune the
-    * fetch to the pages actually holding survivors instead of re-reading
-    * the probed cells' vector column. (The standard candidates-then-gets
-    * shape of a quantized ANN store; without the literal pushdown the
-    * rerank would re-scan every probed cell's `v` and erase the q8
-    * saving.)
-    *
-    * Requires `q8` on `index.assigned` (every [[IvfObjectStore]] carries
-    * it; [[q8Augment]] for in-memory indexes). A null q8 (cell files
-    * written without the column) FAILS LOUDLY on the scored candidates
-    * rather than silently dropping them from the heap.
-    */
-  def ivfTopKWithQ8(index: IvfIndex, queries: DataFrame, k: Int,
-                    nprobe: Int = 4, rerankFactor: Int = 4,
-                    qIdCol: String = "q_id", qVecCol: String = "qv",
-                    where: Option[Column] = None)
-      : DataFrame =
-    ivfTopKQuant(index, queries, k, nprobe, rerankFactor, qIdCol, qVecCol,
-                 quantCol = "q8", encodeFn = "graft_q8b",
-                 cosFn = "graft_q8b_cos", label = "ivfTopKWithQ8",
-                 augmentHint = "q8Augment", where = where)
-
-  /** [[ivfTopKWithQ8]] at the int4 rung: candidates in the probed cells
-    * are scored with `graft_q4b_cos` off the store's nibble-packed `q4`
-    * column — HALF a byte per component, a 16× cut vs the raw doubles in
-    * the candidate scan — then the top k·`rerankFactor` per query rerank
-    * with exact cosine through the same gated survivor fetch. The coarser
-    * 4-bit codes drop more true neighbors at a given budget than q8
-    * (that's the rung's price — measure it with [[tierRecall]] before
-    * deploying); with the budget covering the probed population the
-    * result is exactly [[ivfTopKWith]]'s (spec-pinned). Requires `q4` on
-    * `index.assigned` (opt-in at write: `IvfObjectStore.create(q4 =
-    * true)`; [[q4Augment]] for in-memory indexes). */
-  def ivfTopKWithQ4(index: IvfIndex, queries: DataFrame, k: Int,
-                    nprobe: Int = 4, rerankFactor: Int = 4,
-                    qIdCol: String = "q_id", qVecCol: String = "qv",
-                    where: Option[Column] = None)
-      : DataFrame =
-    ivfTopKQuant(index, queries, k, nprobe, rerankFactor, qIdCol, qVecCol,
-                 quantCol = "q4", encodeFn = "graft_q4b",
-                 cosFn = "graft_q4b_cos", label = "ivfTopKWithQ4",
-                 augmentHint = "q4Augment", where = where)
-
-  /** [[ivfTopKWithQ8]] at the ONE-BIT rung — the bottom of the at-rest
-    * ladder (raw → q8 8× → q4 16× → b1 64× fewer candidate-scan vector
-    * bytes at dim 64). Candidates in the probed cells are scored with
-    * `graft_b1_cos` off the store's sign-packed `b1` column — XOR +
-    * POPCNT over dim/8 bytes, the cheapest candidate kernel this library
-    * has — then the top k·`rerankFactor` per query rerank with exact
-    * cosine through the same gated survivor fetch. One bit per component
-    * keeps only the orthant, so this rung drops the most true neighbors
-    * at a given budget (the binary-quantization trade every production
-    * vector store documents; measure with [[tierRecall]] and size
-    * `rerankFactor` accordingly — with the budget covering the probed
-    * population the result is exactly [[ivfTopKWith]]'s, spec-pinned).
-    * The b1 surrogate is a monotone image of Hamming distance (65
-    * distinct values at dim 64), so candidate ties are COMMON —
-    * `graft_topk`'s deterministic id-ascending tie-break is what keeps
-    * the cut reproducible across engines. Requires `b1` on
-    * `index.assigned` (opt-in at write: `IvfObjectStore.create(b1 =
-    * true)`; [[b1Augment]] for in-memory indexes). */
-  def ivfTopKWithB1(index: IvfIndex, queries: DataFrame, k: Int,
-                    nprobe: Int = 4, rerankFactor: Int = 4,
-                    qIdCol: String = "q_id", qVecCol: String = "qv",
-                    where: Option[Column] = None)
-      : DataFrame =
-    ivfTopKQuant(index, queries, k, nprobe, rerankFactor, qIdCol, qVecCol,
-                 quantCol = "b1", encodeFn = "graft_b1b",
-                 cosFn = "graft_b1_cos", label = "ivfTopKWithB1",
-                 augmentHint = "b1Augment", where = where)
-
-  /** Shared body of the scalar-quantized at-rest serves — one candidate
-    * kernel, two physical rungs (q8 / q4), identical two-stage shape:
-    * column-pruned integer candidate scoring over (n_id, c_id, quant),
-    * then the |Q|-gated exact rerank ([[survivorRerank]]). */
-  private def ivfTopKQuant(index: IvfIndex, queries: DataFrame, k: Int,
-                           nprobe: Int, rerankFactor: Int,
-                           qIdCol: String, qVecCol: String,
-                           quantCol: String, encodeFn: String,
-                           cosFn: String, label: String,
-                           augmentHint: String,
-                           where: Option[Column] = None): DataFrame = {
-    require(k >= 1, s"$label: k must be >= 1, got $k")
-    require(rerankFactor >= 1,
-      s"$label: rerankFactor must be >= 1, got $rerankFactor")
-    require(index.assigned.columns.contains(quantCol),
-      s"$label: index has no $quantCol column — read a store written with " +
-      s"the $quantCol layout, or wrap an in-memory index with $augmentHint")
-    graft.GraftSession.ensureExtensions(queries.sparkSession)
-    // persist the (serving-contract-bounded) minibatch projection: a
-    // quantized serve evaluates it at least three times — the |Q| count
-    // below, the survivor-fetch collect of `cand` (whose probe side
-    // embeds it), and the final rerank plan's broadcast(q) — and the
-    // caller's derivation is often a corpus join (guide §1.2 fewer
-    // passes; r17 ProbePhases). Lazy; streaming frames pass through.
-    val q = queries.select(col(qIdCol).as("q_id"), col(qVecCol).as("qv"))
-    if (!q.isStreaming) q.persist()
-    val probes = probeCells(q, index.centroids, nprobe, Seq("q_id", "qv"))
-    val pq = broadcast(probes.withColumn("__qq", expr(s"$encodeFn(qv)")))
-    val kk = k * rerankFactor
-    // stage 1: integer candidate scoring over (n_id, c_id, quant) — column
-    // pruning keeps the doubles out of this scan entirely
-    // the metadata predicate filters the candidate scan BEFORE the
-    // quantized cut (same placement as ivfTopKWith's filtered serve:
-    // pushed to the at-rest reader, composing with DPP); the metadata
-    // column joins the pruned column set only when a filter needs it
-    val scan0 = where.fold(index.assigned)(index.assigned.filter(_))
-    val cand = pq
-      .join(scan0.select(col("n_id"), col("c_id"), col(quantCol)),
-            "c_id")
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-              expr(s"""if(isnull($quantCol),
-                        cast(assert_true(false,
-                          '$label: null $quantCol — cell files written
-                           without the column; rebuild the store') AS double),
-                        $cosFn(__qq, $quantCol))""").as("qc"))
-      .groupBy("q_id")
-      .agg(expr(s"graft_topk(qc, n_id, $kk)").as("tk"))
-      .select(col("q_id"), explode(col("tk.id")).as("n_id"))
-    // stage 2, gated in |Q|·k·rerankFactor: literal `n_id IN (...)`
-    // row-group-pruned fetch below the gate, broadcast-join fetch past it
-    // (see survivorRerank / SurvivorFetchMaxLiterals). |Q| costs one count
-    // over the (bounded by the serving contract) query batch.
-    survivorRerank(cand, index.assigned.select(col("n_id"), col("v")),
-                   q, k, q.count() * kk)
   }
 
   /** Fixed-point grid for [[kmeansRefine]]'s centroid accumulation:

@@ -159,6 +159,11 @@ object HybridRetrieval {
     * standard IVF recall trade, confined to the semantic leg — and with
     * `nprobe` ≥ the cell count the two tiers are EQUAL, which is the
     * spec's parity pin).
+    *
+    * `tier` picks the semantic leg's [[ScoringTier]], as in
+    * [[GraftSimilarity.ivfTopKWith]]: every serving rung behind ONE
+    * rank-only fusion. At covering nprobe + covering rerankFactor each
+    * tier equals [[hybridTopK]] exactly (SimilaritySpec pins each rung).
     */
   def hybridTopKWith(index: IvfIndex, docs: DataFrame, queries: DataFrame,
                      k: Int = 10, kCand: Int = 30, rrfK: Int = 60,
@@ -167,7 +172,8 @@ object HybridRetrieval {
                      qIdCol: String = "q_id", qTermsCol: String = "q_terms",
                      qVecCol: String = "qv",
                      k1: Double = 1.2, b: Double = 0.75,
-                     where: Option[Column] = None): DataFrame = {
+                     where: Option[Column] = None,
+                     tier: ScoringTier = ScoringTier.Exact): DataFrame = {
     requireParams(k, kCand, rrfK, "hybridTopKWith")
     require(nprobe >= 1, s"hybridTopKWith: nprobe must be >= 1, got $nprobe")
     graft.GraftSession.ensureExtensions(docs.sparkSession)
@@ -181,125 +187,13 @@ object HybridRetrieval {
     // unfiltered corpus's term weights).
     val sem = GraftSimilarity.ivfTopKWith(
         index, q.select(col("q_id"), col("__qv").as("qv")), kCand, nprobe,
-        where = where)
+        where = where, tier = tier)
       .select(col("q_id"), col("n_id").as("doc_id"),
               col("rnk").as("sem_rank"))
     fuse(lexRanks(docs, q, kCand, idCol, textCol, k1, b), sem, k, rrfK)
   }
 
-  /** The fused top-`k` over the q8 (8×) tier: semantic leg through
-    * [[GraftSimilarity.ivfTopKWithQ8]] — integer candidate scoring off
-    * the store's byte-packed `q8` column in the probed cells, exact
-    * rerank of kCand·rerankFactor survivors — behind the same rank-only
-    * fusion contract. Completes the serving matrix (brute / IVF / q8 /
-    * PQ, each behind one fusion): at a covering budget the q8 cut loses
-    * nothing, so covering nprobe + covering rerankFactor equals
-    * [[hybridTopK]] exactly (spec-pinned). `index.assigned` must carry
-    * `q8` (stores written at r11+ do; [[GraftSimilarity.q8Augment]] for
-    * in-memory indexes).
-    */
-  def hybridTopKWithQ8(index: IvfIndex, docs: DataFrame, queries: DataFrame,
-                       k: Int = 10, kCand: Int = 30, rrfK: Int = 60,
-                       nprobe: Int = 4, rerankFactor: Int = 4,
-                       idCol: String = "doc_id", textCol: String = "text",
-                       qIdCol: String = "q_id", qTermsCol: String = "q_terms",
-                       qVecCol: String = "qv",
-                       k1: Double = 1.2, b: Double = 0.75,
-                       where: Option[Column] = None): DataFrame = {
-    requireParams(k, kCand, rrfK, "hybridTopKWithQ8")
-    require(nprobe >= 1, s"hybridTopKWithQ8: nprobe must be >= 1, got $nprobe")
-    require(rerankFactor >= 1,
-      s"hybridTopKWithQ8: rerankFactor must be >= 1, got $rerankFactor")
-    graft.GraftSession.ensureExtensions(docs.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol)
-    val sem = GraftSimilarity.ivfTopKWithQ8(
-        index, q.select(col("q_id"), col("__qv").as("qv")), kCand,
-        nprobe, rerankFactor, where = where)
-      .select(col("q_id"), col("n_id").as("doc_id"),
-              col("rnk").as("sem_rank"))
-    fuse(lexRanks(docs, q, kCand, idCol, textCol, k1, b), sem, k, rrfK)
-  }
-
-  /** The fused top-`k` over the int4 (16×) tier: semantic leg through
-    * [[GraftSimilarity.ivfTopKWithQ4]] — integer candidate scoring off
-    * the store's nibble-packed `q4` column, exact rerank of
-    * kCand·rerankFactor survivors — completing the fusion matrix
-    * (brute / IVF / q8 / q4 / PQ behind ONE rank-only contract).
-    * `index.assigned` must carry `q4` (a store created with
-    * `IvfObjectStore.create(q4 = true)`, or [[GraftSimilarity.q4Augment]] for
-    * in-memory indexes — the tier is opt-in at write). At covering
-    * nprobe + covering rerankFactor the output equals [[hybridTopK]]
-    * exactly, the same parity contract as the q8/PQ rungs.
-    */
-  def hybridTopKWithQ4(index: IvfIndex, docs: DataFrame, queries: DataFrame,
-                       k: Int = 10, kCand: Int = 30, rrfK: Int = 60,
-                       nprobe: Int = 4, rerankFactor: Int = 4,
-                       idCol: String = "doc_id", textCol: String = "text",
-                       qIdCol: String = "q_id", qTermsCol: String = "q_terms",
-                       qVecCol: String = "qv",
-                       k1: Double = 1.2, b: Double = 0.75,
-                       where: Option[Column] = None): DataFrame = {
-    requireParams(k, kCand, rrfK, "hybridTopKWithQ4")
-    require(nprobe >= 1, s"hybridTopKWithQ4: nprobe must be >= 1, got $nprobe")
-    require(rerankFactor >= 1,
-      s"hybridTopKWithQ4: rerankFactor must be >= 1, got $rerankFactor")
-    graft.GraftSession.ensureExtensions(docs.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol)
-    val sem = GraftSimilarity.ivfTopKWithQ4(
-        index, q.select(col("q_id"), col("__qv").as("qv")), kCand,
-        nprobe, rerankFactor, where = where)
-      .select(col("q_id"), col("n_id").as("doc_id"),
-              col("rnk").as("sem_rank"))
-    fuse(lexRanks(docs, q, kCand, idCol, textCol, k1, b), sem, k, rrfK)
-  }
-
-  /** The fused top-`k` over the ONE-BIT tier: semantic leg through
-    * [[GraftSimilarity.ivfTopKWithB1]] — XOR+POPCNT Hamming candidate
-    * scoring off the store's sign-packed `b1` column in the probed
-    * cells (the cheapest candidate kernel of the ladder), exact rerank
-    * of kCand·rerankFactor survivors — behind the same rank-only fusion
-    * contract. Completes the fusion matrix at the bottom of the
-    * vector-bytes ladder (brute / IVF / q8 / q4 / b1 / PQ / MaxSim).
-    * The coarsest rung drops the most true semantic candidates at a
-    * given budget (size `rerankFactor` from a [[GraftSimilarity
-    * .tierRecall]] measurement); lexical candidates survive any
-    * semantic cut, the fusion contract's usual guarantee. Requires `b1`
-    * on `index.assigned` (opt-in at write; [[GraftSimilarity.b1Augment]]
-    * for in-memory). */
-  def hybridTopKWithB1(index: IvfIndex, docs: DataFrame, queries: DataFrame,
-                       k: Int = 10, kCand: Int = 30, rrfK: Int = 60,
-                       nprobe: Int = 4, rerankFactor: Int = 4,
-                       idCol: String = "doc_id", textCol: String = "text",
-                       qIdCol: String = "q_id", qTermsCol: String = "q_terms",
-                       qVecCol: String = "qv",
-                       k1: Double = 1.2, b: Double = 0.75,
-                       where: Option[Column] = None): DataFrame = {
-    requireParams(k, kCand, rrfK, "hybridTopKWithB1")
-    require(nprobe >= 1, s"hybridTopKWithB1: nprobe must be >= 1, got $nprobe")
-    require(rerankFactor >= 1,
-      s"hybridTopKWithB1: rerankFactor must be >= 1, got $rerankFactor")
-    graft.GraftSession.ensureExtensions(docs.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol)
-    val sem = GraftSimilarity.ivfTopKWithB1(
-        index, q.select(col("q_id"), col("__qv").as("qv")), kCand,
-        nprobe, rerankFactor, where = where)
-      .select(col("q_id"), col("n_id").as("doc_id"),
-              col("rnk").as("sem_rank"))
-    fuse(lexRanks(docs, q, kCand, idCol, textCol, k1, b), sem, k, rrfK)
-  }
-
-  /** The fused top-`k` over the 64× PQ tier: semantic leg through
-    * [[GraftPq.ivfPqTopKWithCw]] — ADC candidate scoring off the store's
-    * m-byte code words in the probed cells, exact rerank of
-    * kCand·rerankFactor survivors — behind the SAME rank-only RRF fusion
-    * contract as [[hybridTopKWith]] (VERDICT r11 missing #4). The PQ
-    * recall trade is confined to the semantic leg and bounded by
-    * `rerankFactor` (size it with [[GraftPq.pqAutoBudget]] — see
-    * [[GraftPq.pqTopK]]'s budget warning); with `nprobe` covering every
-    * cell and a covering budget the output equals [[hybridTopK]]'s
-    * exactly (HybridSpec pins it). `index.assigned` must carry `cw`
-    * (an [[IvfObjectStore]] snapshot created with `pq = Some(cb)`).
-    */
+  /** [[hybridTopKWith]] at [[ScoringTier.Pq]] (VERDICT r11 missing #4). */
   def hybridTopKWithPq(index: IvfIndex, cb: GraftPq.PqCodebook,
                        docs: DataFrame, queries: DataFrame,
                        k: Int = 10, kCand: Int = 30, rrfK: Int = 60,
@@ -308,20 +202,10 @@ object HybridRetrieval {
                        qIdCol: String = "q_id", qTermsCol: String = "q_terms",
                        qVecCol: String = "qv",
                        k1: Double = 1.2, b: Double = 0.75,
-                       where: Option[Column] = None): DataFrame = {
-    requireParams(k, kCand, rrfK, "hybridTopKWithPq")
-    require(nprobe >= 1, s"hybridTopKWithPq: nprobe must be >= 1, got $nprobe")
-    require(rerankFactor >= 1,
-      s"hybridTopKWithPq: rerankFactor must be >= 1, got $rerankFactor")
-    graft.GraftSession.ensureExtensions(docs.sparkSession)
-    val q = qBatch(queries, qIdCol, qTermsCol, qVecCol)
-    val sem = GraftPq.ivfPqTopKWithCw(
-        index, cb, q.select(col("q_id"), col("__qv").as("qv")), kCand,
-        nprobe, rerankFactor, where = where)
-      .select(col("q_id"), col("n_id").as("doc_id"),
-              col("rnk").as("sem_rank"))
-    fuse(lexRanks(docs, q, kCand, idCol, textCol, k1, b), sem, k, rrfK)
-  }
+                       where: Option[Column] = None): DataFrame =
+    hybridTopKWith(index, docs, queries, k, kCand, rrfK, nprobe, idCol,
+                   textCol, qIdCol, qTermsCol, qVecCol, k1, b, where,
+                   ScoringTier.Pq(cb, rerankFactor))
 
   /** BM25 ⊕ late-interaction (MaxSim) fusion — the ColBERT deployment
     * shape: the lexical leg is the same [[TextRank.bm25Scores]] kernel,
@@ -502,8 +386,8 @@ object HybridRetrieval {
     * .impactsFor]]'s literal predicates (minibatch term collect, the
     * survivor-fetch precedent).
     *
-    * The semantic leg is [[GraftSimilarity.ivfTopKWithQ8]] off the
-    * at-rest q8 column with `where` filtering the candidate scan BEFORE
+    * The semantic leg is [[GraftSimilarity.ivfTopKWith]] at
+    * [[ScoringTier.Q8]] off the at-rest q8 column with `where` filtering the candidate scan BEFORE
     * the quantized cut (pre-filter semantics; predicate reaches the
     * reader beside the DPP cell prune). The two legs fuse at `kCand`
     * under the family RRF contract, and the fused candidacy re-ranks
@@ -592,9 +476,9 @@ object HybridRetrieval {
         top.join(guard, "q_id")
           .select(col("q_id"), col("doc_id"), col("lex_rank"))
       }
-    val sem = GraftSimilarity.ivfTopKWithQ8(
+    val sem = GraftSimilarity.ivfTopKWith(
         index, q.select(col("q_id"), col("__qv").as("qv")), kCand,
-        nprobe, rerankFactor, where = where)
+        nprobe, where = where, tier = ScoringTier.Q8(rerankFactor))
       .select(col("q_id"), col("n_id").as("doc_id"),
               col("rnk").as("sem_rank"))
     val fused = fuse(lex, sem, kCand, rrfK)
@@ -608,10 +492,10 @@ object HybridRetrieval {
     GraftSimilarity.mmrRerank(cand, src, k, lambda)
   }
 
-  /** [[hybridTopKWithPq]] straight off an at-rest PQ store (an
-    * [[IvfObjectStore]] created with `pq = Some(cb)`): one call from
-    * store path to fused results — the RAG deployment shape where BM25
-    * fuses with the compressed index already being served. */
+  /** [[hybridTopKWith]] at [[ScoringTier.Pq]] straight off an at-rest
+    * PQ store (an [[IvfObjectStore]] created with `pq = Some(cb)`): one
+    * call from store path to fused results — the RAG deployment shape
+    * where BM25 fuses with the compressed index already being served. */
   def hybridTopKPqStored(spark: org.apache.spark.sql.SparkSession,
                          dir: String, docs: DataFrame, queries: DataFrame,
                          k: Int = 10, kCand: Int = 30, rrfK: Int = 60,
@@ -621,8 +505,8 @@ object HybridRetrieval {
                          qTermsCol: String = "q_terms",
                          qVecCol: String = "qv",
                          k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    hybridTopKWithPq(IvfObjectStore.read(spark, dir),
-                     GraftPq.readPqCodebook(spark, dir), docs, queries,
-                     k, kCand, rrfK, nprobe, rerankFactor, idCol, textCol,
-                     qIdCol, qTermsCol, qVecCol, k1, b)
+    hybridTopKWith(IvfObjectStore.read(spark, dir), docs, queries, k, kCand,
+                   rrfK, nprobe, idCol, textCol, qIdCol, qTermsCol, qVecCol,
+                   k1, b, tier = ScoringTier.Pq(
+                     GraftPq.readPqCodebook(spark, dir), rerankFactor))
 }

@@ -345,34 +345,25 @@ object IvfObjectStore {
         "another protocol handled the write"))
   }
 
-  /** The at-rest shape of an assigned frame, shared by every path that
-    * writes cell files (create, append, compact, delete): the q8 serving
-    * column attached (unless the frame already carries one — a
-    * compaction rewrite must not re-quantize), one shuffle on cell id,
-    * rows n_id-sorted within each cell file for the rerank fetch's
-    * row-group pruning. */
-  private def storedLayout(assigned: DataFrame, q4: Boolean = false,
-                           b1: Boolean = false): DataFrame = {
-    val withQ8 =
-      if (assigned.columns.contains("q8")) assigned
-      else assigned.withColumn("q8", expr("graft_q8b(v)"))
-    // the q4 rung is OPT-IN at write (VERDICT r12 #3): its d/2 bytes are
-    // only ~6% of the file, but the graft_q4b pass on every store write
-    // is a real cost a store that never serves the int4 tier should not
-    // pay (the ann_ivf_stored 1.50× regression was exactly this). A
-    // frame already carrying q4 keeps it (append/compaction rewrites of
-    // a q4-carrying store must not drop the tier); create(q4 = true)
-    // opts a new store in.
-    val withQ4 =
-      if (withQ8.columns.contains("q4")) withQ8
-      else if (q4) withQ8.withColumn("q4", expr("graft_q4b(v)"))
-      else withQ8
-    // the 1-bit rung follows the same opt-in-at-write / keep-on-rewrite
-    // contract (serve via ivfTopKWithB1)
-    val withB1 =
-      if (withQ4.columns.contains("b1")) withQ4
-      else if (b1) withQ4.withColumn("b1", expr("graft_b1b(v)"))
-      else withQ4
+  /** Stage an assigned frame's cell files in their at-rest shape —
+    * shared by every path that writes them (create, append, compact,
+    * delete) — and return their store-relative paths. Each tier's serving
+    * column is encoded through the tier ([[ScoringTier]]) unless the
+    * frame already carries it (a compaction rewrite must not
+    * re-quantize), in at-rest column order: the PQ code word when the
+    * store carries a codebook, q8 on every store, and the `rungs` opted
+    * in at create. The q4 and b1 rungs are OPT-IN (VERDICT r12 #3): their
+    * bytes are a small share of the file, but their encode pass on every
+    * store write is a real cost a store that never serves them should
+    * not pay (the ann_ivf_stored 1.50× regression was exactly this).
+    * Then one shuffle on cell id, rows n_id-sorted within each cell file
+    * for the rerank fetch's row-group pruning. */
+  private def stageAssigned(dir: String, assigned: DataFrame,
+                            pq: Option[GraftPq.PqCodebook],
+                            rungs: Seq[ScoringTier.Scalar] = Nil)
+      : Seq[String] = {
+    val tiers = pq.map(ScoringTier.Pq(_)).toSeq ++
+      (ScoringTier.Q8() +: rungs).distinct
     // ScaleHints.writeWidth: one file per cell either way; a small
     // index writes its cell files from session-width tasks instead of
     // the ONE task AQE's byte-sized coalescing would leave (~1 s of
@@ -383,21 +374,11 @@ object IvfObjectStore {
     // the rerank fetch's row-group pruning keys on — true today
     // (TimSort) but an implementation detail; the explicit compound
     // sort removes the reliance and the writer's own added sort
-    ScaleHints.writeWidth(withB1, col("c_id"))
-      .sortWithinPartitions("c_id", "n_id")
-  }
-
-  // storedLayout's cell files plus the PQ code word when the store
-  // carries a codebook, so ivfTopKWithQ8 / ivfPqTopKWithCw serve the
-  // stored frames exactly as they serve an in-memory index
-  private def stageAssigned(dir: String, assigned: DataFrame,
-                            pq: Option[GraftPq.PqCodebook],
-                            q4: Boolean = false,
-                            b1: Boolean = false): Seq[String] =
-    writeVia(storedLayout(
-               pq.map(GraftPq.withCw(_, assigned)).getOrElse(assigned),
-               q4, b1),
+    writeVia(ScaleHints.writeWidth(ScoringTier.encodeMissing(assigned, tiers),
+                                   col("c_id"))
+               .sortWithinPartitions("c_id", "n_id"),
              s"$dir/data", Seq("c_id")).map(r => s"data/$r")
+  }
 
   /** The store's PQ codebook, if one was attached at create — fixed
     * immutable path OUTSIDE the manifest chain (it is written once and
@@ -412,7 +393,7 @@ object IvfObjectStore {
   /** Create the store: stage centroid + assigned objects, publish
     * manifest v1. Refuses a dir that already has a manifest chain.
     * With `pq` the staged cell files also carry the m-byte PQ code word
-    * (`cw` — the [[GraftPq.ivfPqTopKWithCw]] serving tier) and the
+    * (`cw` — the [[ScoringTier.Pq]] serving tier) and the
     * codebook persists at `$dir/pq_codebook` AFTER the v1 publish wins
     * (a lost create race must not leave a stray codebook that would
     * poison the winner's appends); every later append encodes against
@@ -443,7 +424,8 @@ object IvfObjectStore {
       val data = stageAssigned(dir, index.assigned.select(
         col("n_id").cast("long").as("n_id") +: col("v") +:
           col("c_id").cast("long").as("c_id") +: meta.map(col): _*), pqP,
-        q4, b1)
+        Seq(q4 -> ScoringTier.Q4(), b1 -> ScoringTier.B1())
+          .collect { case (true, t) => t })
       if (!publish(fs, dir, Manifest(1, cents, data, Set.empty)))
         throw new ManifestConflict(
           s"IvfObjectStore.create: lost the v1 publish race on $dir — " +
@@ -532,6 +514,7 @@ object IvfObjectStore {
     batchTag.foreach(t => require(t.matches("[A-Za-z0-9_]+"),
       s"batchTag '$t' must match [A-Za-z0-9_]+ (silent sanitization " +
       "could collide two tags)"))
+    GraftSimilarity.requireIntegralId(batch, idCol, "IvfObjectStore.append")
     // same convention as GraftSimilarity's public entry points: a fresh
     // ingest-daemon session that only reads + appends must still resolve
     // graft_cosine inside assignTo
@@ -558,7 +541,7 @@ object IvfObjectStore {
           if (m.data.isEmpty) Nil
           else
             // one footer read — every data object shares the snapshot
-            // schema (create/compact/append all write storedLayout frames)
+            // schema (create/compact/append all stage through stageAssigned)
             spark.read.parquet(s"$dir/${m.data.head}").columns.toSeq
         val meta = GraftSimilarity.metaColsOf(snapCols)
         GraftSimilarity.requireMetaCols(meta, batch.columns.toSeq,
@@ -570,7 +553,7 @@ object IvfObjectStore {
           // appended objects match the snapshot's quantized-tier set —
           // mixed q4/b1 presence across one snapshot's files would break
           // the shared-schema invariant the reads rely on
-          q4 = snapCols.contains("q4"), b1 = snapCols.contains("b1"))
+          ScoringTier.Scalars.filter(t => snapCols.contains(t.column)))
         stagedAgainst = m.centroids
       }
       val next = Manifest(m.version + 1, m.centroids, m.data ++ staged,
@@ -681,6 +664,7 @@ object IvfObjectStore {
     batchTag.foreach(t => require(t.matches("[A-Za-z0-9_]+"),
       s"batchTag '$t' must match [A-Za-z0-9_]+ (same tag grammar as " +
       "append: silent sanitization could collide two tags)"))
+    GraftSimilarity.requireIntegralId(ids, idCol, "IvfObjectStore.delete")
     graft.GraftSession.ensureExtensions(spark)
     val fs = fsOf(spark, dir)
     val del = ids.select(col(idCol).cast("long").as("n_id")).distinct()

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{GraftSimilarity, IvfObjectStore}
+import graft.operators.{GraftSimilarity, IvfObjectStore, ScoringTier}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (`embedding: array<float>`, 64-dim) — catalog entries for the three
@@ -31,6 +31,16 @@ object SimilarityQueries extends QueryModule {
   private def queryBlock(e: DataFrame): DataFrame =
     e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
+
+  /** The hybrid rows' query minibatch: documents 0–9 with their
+    * whitespace tokens and embedding, (q_id, q_terms, qv). */
+  private def hybridQueryBlock(docs: DataFrame, e: DataFrame): DataFrame =
+    docs.filter(col("doc_id") < 10)
+      .join(e, col("doc_id") === col("vec_id"))
+      .select(col("doc_id").as("q_id"),
+              graft.operators.GraftText.whitespaceTokens(col("text"))
+                .as("q_terms"),
+              col("v").as("qv"))
 
   /** The DuckDB replay of `ann_lsh_bucket` (srpTopK at nbits=16, bands=4,
     * k=5 over dim-64 embeddings): the 16×64 hyperplane matrix is a pure
@@ -653,16 +663,44 @@ object SimilarityQueries extends QueryModule {
     out
   }
 
-  /** The body shared by `ann_ivf_stored` and its twin
-    * `ann_ivf_stored_manifest`: build, create the store under `sub`,
-    * read the manifest snapshot back, serve. */
-  private def ivfStoredRow(sub: String)(s: SparkSession,
-                                        dir: String): DataFrame = {
-    val e = vecs(s, dir)
+  /** Build over `e`, create a fresh store under `sub` carrying the
+    * column the exact or scalar `tier` scores, and read the manifest
+    * snapshot back (a PQ store also needs a trained codebook — see
+    * [[ivfStoredPqRow]]). q8 is on every store; the q4 and b1 tiers are
+    * opt-in at write (stores that never serve them skip the extra
+    * quantization pass — VERDICT r12 #3). */
+  private def tierStore(s: SparkSession, dir: String, sub: String,
+                        e: DataFrame, tier: ScoringTier)
+      : GraftSimilarity.IvfIndex = {
     val out = freshStoreDir(s, dir, sub)
-    IvfObjectStore.create(s, GraftSimilarity.buildIvfIndex(e), out)
-    GraftSimilarity.ivfTopKWith(IvfObjectStore.read(s, out),
-                                queryBlock(e), k = 5, nprobe = 4)
+    IvfObjectStore.create(s, GraftSimilarity.buildIvfIndex(e), out,
+                          q4 = tier.isInstanceOf[ScoringTier.Q4],
+                          b1 = tier.isInstanceOf[ScoringTier.B1])
+    IvfObjectStore.read(s, out)
+  }
+
+  /** The body shared by `ann_ivf_stored` (and its twin
+    * `ann_ivf_stored_manifest`) and the stored q8/q4/b1 rungs: a fresh
+    * [[tierStore]] under `sub`, served at `tier`. */
+  private def ivfStoredRow(sub: String,
+                           tier: ScoringTier = ScoringTier.Exact)(
+      s: SparkSession, dir: String): DataFrame = {
+    val e = vecs(s, dir)
+    GraftSimilarity.ivfTopKWith(tierStore(s, dir, sub, e, tier),
+                                queryBlock(e), k = 5, nprobe = 4,
+                                tier = tier)
+  }
+
+  /** The body shared by the stored hybrid rungs `ann_hybrid_q8/q4/b1`:
+    * BM25 fused with the semantic leg served at `tier` off a fresh
+    * [[tierStore]] under `sub`. */
+  private def hybridStoredRow(sub: String, tier: ScoringTier)(
+      s: SparkSession, dir: String): DataFrame = {
+    val docs = t(s, dir, "documents")
+    val e = vecs(s, dir)
+    graft.operators.HybridRetrieval.hybridTopKWith(
+      tierStore(s, dir, sub, e, tier), docs, hybridQueryBlock(docs, e),
+      k = 10, kCand = 30, rrfK = 60, nprobe = 4, tier = tier)
   }
 
   /** The body shared by `ann_ivf_delete` and its twin
@@ -689,10 +727,9 @@ object SimilarityQueries extends QueryModule {
     val cb = graft.operators.GraftPq.trainPq(e, m = 8, ksub = 16, iters = 2)
     IvfObjectStore.create(
       s, GraftSimilarity.buildIvfIndex(e), out, pq = Some(cb))
-    graft.operators.GraftPq.ivfPqTopKWithCw(
-      IvfObjectStore.read(s, out),
-      graft.operators.GraftPq.readPqCodebook(s, out),
-      queryBlock(e), k = 5, nprobe = 4, rerankFactor = 4)
+    GraftSimilarity.ivfTopKWith(
+      IvfObjectStore.read(s, out), queryBlock(e), k = 5, nprobe = 4,
+      tier = ScoringTier.Pq(graft.operators.GraftPq.readPqCodebook(s, out)))
   }
 
   /** Build-or-reuse a token-level IVF store under `/tmp/graft_io`
@@ -1095,7 +1132,7 @@ object SimilarityQueries extends QueryModule {
     GraftQuery("ann_ivf_delete_manifest", ivfDeleteRow("ivf_delete_manifest"),
                Some(ivfDeleteOracleSql)),
 
-    // The QUANTIZED at-rest serve tier (ivfTopKWithQ8): the store's cell
+    // The QUANTIZED at-rest serve tier (ScoringTier.Q8): the store's cell
     // files carry q8 = graft_q8(v) next to the exact vectors; candidates
     // in the probed cells are scored with the pure-integer graft_q8_cos
     // off that column (~8× fewer vector bytes in the candidate scan),
@@ -1108,14 +1145,7 @@ object SimilarityQueries extends QueryModule {
     // build + probe + quantized cut + exact rerank and hash-matches.
     GraftQuery(
       "ann_ivf_stored_q8",
-      (s, dir) => {
-        val e = vecs(s, dir)
-        val out = freshStoreDir(s, dir, "ivf_index_q8")
-        IvfObjectStore.create(s, GraftSimilarity.buildIvfIndex(e), out)
-        GraftSimilarity.ivfTopKWithQ8(IvfObjectStore.read(s, out),
-                                      queryBlock(e), k = 5, nprobe = 4,
-                                      rerankFactor = 4)
-      },
+      ivfStoredRow("ivf_index_q8", ScoringTier.Q8(4)),
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
         |mx AS (SELECT vec_id, v,
         |         list_max(list_transform(v, x -> abs(x))) m FROM e),
@@ -1168,7 +1198,7 @@ object SimilarityQueries extends QueryModule {
         |SELECT q_id, n_id, CAST(rnk AS BIGINT) AS rnk, round(cs, 4) AS cos
         |FROM r WHERE rnk <= 5""".stripMargin)),
 
-    // The int4 rung of the same at-rest serve (ivfTopKWithQ4): the
+    // The int4 rung of the same at-rest serve (ScoringTier.Q4): the
     // store's cell files carry q4 = nibble-packed round(x·7/max|x|)
     // beside q8 — HALF a byte per component, 16× less candidate I/O
     // than the raw doubles — and the serve is the identical two-stage
@@ -1179,17 +1209,7 @@ object SimilarityQueries extends QueryModule {
     // integer cosine cut, and the exact rerank, and hash-matches.
     GraftQuery(
       "ann_ivf_stored_q4",
-      (s, dir) => {
-        val e = vecs(s, dir)
-        val out = freshStoreDir(s, dir, "ivf_index_q4")
-        // the int4 tier is opt-in at write (stores that never serve it
-        // skip the second quantization pass — VERDICT r12 #3)
-        IvfObjectStore.create(s, GraftSimilarity.buildIvfIndex(e), out,
-                              q4 = true)
-        GraftSimilarity.ivfTopKWithQ4(IvfObjectStore.read(s, out),
-                                      queryBlock(e), k = 5, nprobe = 4,
-                                      rerankFactor = 4)
-      },
+      ivfStoredRow("ivf_index_q4", ScoringTier.Q4(4)),
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
         |mx AS (SELECT vec_id, v,
         |         list_max(list_transform(v, x -> abs(x))) m FROM e),
@@ -1242,7 +1262,7 @@ object SimilarityQueries extends QueryModule {
         |SELECT q_id, n_id, CAST(rnk AS BIGINT) AS rnk, round(cs, 4) AS cos
         |FROM r WHERE rnk <= 5""".stripMargin)),
 
-    // The ONE-BIT rung of the at-rest serve (ivfTopKWithB1): the store's
+    // The ONE-BIT rung of the at-rest serve (ScoringTier.B1): the store's
     // cell files carry b1 = sign-packed bits (opt-in at write, like q4)
     // — 1 bit per component, 64× less candidate I/O than the raw doubles
     // at dim 64 — and the serve is the identical two-stage shape
@@ -1256,16 +1276,7 @@ object SimilarityQueries extends QueryModule {
     // probe walk, and the exact rerank, and hash-matches.
     GraftQuery(
       "ann_ivf_stored_b1",
-      (s, dir) => {
-        val e = vecs(s, dir)
-        val out = freshStoreDir(s, dir, "ivf_index_b1")
-        // the 1-bit tier is opt-in at write, same contract as q4
-        IvfObjectStore.create(s, GraftSimilarity.buildIvfIndex(e), out,
-                              b1 = true)
-        GraftSimilarity.ivfTopKWithB1(IvfObjectStore.read(s, out),
-                                      queryBlock(e), k = 5, nprobe = 4,
-                                      rerankFactor = 4)
-      },
+      ivfStoredRow("ivf_index_b1", ScoringTier.B1(4)),
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
         |b1 AS (SELECT vec_id, v,
         |         list_transform(v, x -> CASE WHEN x > 0 THEN 1.0
@@ -2007,12 +2018,7 @@ object SimilarityQueries extends QueryModule {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueryBlock(docs, e)
         graft.operators.HybridRetrieval.hybridTopK(
           docs, e, queries, k = 10, kCand = 30, rrfK = 60)
       },
@@ -2081,12 +2087,7 @@ object SimilarityQueries extends QueryModule {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueryBlock(docs, e)
         graft.operators.HybridRetrieval.hybridTopKWith(
           GraftSimilarity.buildIvfIndex(e), docs, queries,
           k = 10, kCand = 30, rrfK = 60, nprobe = 4)
@@ -2108,12 +2109,7 @@ object SimilarityQueries extends QueryModule {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueryBlock(docs, e)
         graft.operators.HybridRetrieval.hybridTopKWithImpacts(
           GraftSimilarity.buildIvfIndex(e),
           TextQueries.storedImpactIndex(s, dir), queries,
@@ -2133,12 +2129,7 @@ object SimilarityQueries extends QueryModule {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueryBlock(docs, e)
         graft.operators.HybridRetrieval.hybridTopKWithImpacts(
           GraftSimilarity.buildIvfIndex(e),
           TextQueries.manifestImpactIndex(s, dir), queries,
@@ -2164,12 +2155,7 @@ object SimilarityQueries extends QueryModule {
           docs.select(col("doc_id"), col("lang")),
           col("vec_id") === col("doc_id"))
           .select(col("vec_id"), col("v"), col("lang"))
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueryBlock(docs, e)
         graft.operators.HybridRetrieval.hybridTopKWith(
           GraftSimilarity.buildIvfIndex(eMeta, metaCols = Seq("lang")),
           docs.filter(col("lang") === "en"), queries,
@@ -2181,7 +2167,7 @@ object SimilarityQueries extends QueryModule {
     // The filtered fusion through the QUANTIZED rung: same pre-filter
     // contract as ann_hybrid_filtered (BM25 stats over the filtered
     // corpus, `where` serve through the lang-carrying index), but the
-    // semantic leg is ivfTopKWithQ8 — the integer q8 cut runs over the
+    // semantic leg is the Q8 tier — the integer q8 cut runs over the
     // FILTERED candidate population before the exact rerank, certifying
     // that the quantized cut composes with pre-filter semantics (a
     // post-filter would rank with unfiltered candidates and could ship
@@ -2195,50 +2181,29 @@ object SimilarityQueries extends QueryModule {
           docs.select(col("doc_id"), col("lang")),
           col("vec_id") === col("doc_id"))
           .select(col("vec_id"), col("v"), col("lang"))
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueryBlock(docs, e)
         val out = freshStoreDir(s, dir, "hybrid_filtered_q8_store")
         IvfObjectStore.create(s,
           GraftSimilarity.buildIvfIndex(eMeta, metaCols = Seq("lang")), out)
-        graft.operators.HybridRetrieval.hybridTopKWithQ8(
+        graft.operators.HybridRetrieval.hybridTopKWith(
           IvfObjectStore.read(s, out),
           docs.filter(col("lang") === "en"), queries,
-          k = 10, kCand = 30, rrfK = 60, nprobe = 4, rerankFactor = 4,
-          where = Some(col("lang") === "en"))
+          k = 10, kCand = 30, rrfK = 60, nprobe = 4, where = Some(col("lang") === "en"),
+          tier = ScoringTier.Q8(4))
       },
       Some(hybridFilteredQ8OracleSql)),
 
-    // The int4 rung of the fusion matrix (hybridTopKWithQ4): BM25 fused
+    // The int4 rung of the fusion matrix (ScoringTier.Q4): BM25 fused
     // with candidates scored off the store's nibble-packed q4 column —
     // the matrix is now brute / IVF / q8 / q4 / PQ behind ONE rank-only
     // fusion contract. Store written with q4 = true (the tier is opt-in
     // at write); the oracle is the q8 fusion replay with the one
     // arithmetic difference — the quantization constant — rewritten.
-    GraftQuery(
-      "ann_hybrid_q4",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-        val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
-        val out = freshStoreDir(s, dir, "hybrid_q4_store")
-        IvfObjectStore.create(s, GraftSimilarity.buildIvfIndex(e), out,
-                              q4 = true)
-        graft.operators.HybridRetrieval.hybridTopKWithQ4(
-          IvfObjectStore.read(s, out), docs, queries,
-          k = 10, kCand = 30, rrfK = 60, nprobe = 4, rerankFactor = 4)
-      },
-      Some(hybridQ4OracleSql)),
+    GraftQuery("ann_hybrid_q4",
+               hybridStoredRow("hybrid_q4_store", ScoringTier.Q4(4)),
+               Some(hybridQ4OracleSql)),
 
-    // The ONE-BIT rung of the fusion matrix (hybridTopKWithB1): BM25
+    // The ONE-BIT rung of the fusion matrix (ScoringTier.B1): BM25
     // fused with candidates scored by XOR+POPCNT Hamming off the
     // store's sign-packed b1 column — the matrix bottoms out the
     // vector-bytes ladder (brute / IVF / q8 / q4 / b1 / PQ / MaxSim)
@@ -2246,25 +2211,9 @@ object SimilarityQueries extends QueryModule {
     // arithmetic differences from the q8 fusion replay (sign quantize,
     // sign-dot surrogate score) — cut, rerank, and fusion replay
     // identically, hash-green.
-    GraftQuery(
-      "ann_hybrid_b1",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-        val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
-        val out = freshStoreDir(s, dir, "hybrid_b1_store")
-        IvfObjectStore.create(s, GraftSimilarity.buildIvfIndex(e), out,
-                              b1 = true)
-        graft.operators.HybridRetrieval.hybridTopKWithB1(
-          IvfObjectStore.read(s, out), docs, queries,
-          k = 10, kCand = 30, rrfK = 60, nprobe = 4, rerankFactor = 4)
-      },
-      Some(hybridB1OracleSql)),
+    GraftQuery("ann_hybrid_b1",
+               hybridStoredRow("hybrid_b1_store", ScoringTier.B1(4)),
+               Some(hybridB1OracleSql)),
 
     // LATE-INTERACTION (ColBERT-style MaxSim) retrieval
     // ([[graft.operators.LateInteraction]]): documents and queries are
@@ -2430,12 +2379,7 @@ object SimilarityQueries extends QueryModule {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueryBlock(docs, e)
         graft.operators.HybridRetrieval.hybridTopKWithMmr(
           GraftSimilarity.buildIvfIndex(e), docs, queries,
           k = 10, kCand = 30, rrfK = 60, nprobe = 4, lambda = 0.5)
@@ -2547,7 +2491,7 @@ object SimilarityQueries extends QueryModule {
       Some(ivfPqOracleSql)),
 
     // The at-rest PQ serving tier (IvfObjectStore.create(…, pq =
-    // Some(cb)) + [[GraftPq.ivfPqTopKWithCw]]): the store's cell files
+    // Some(cb)) + [[ScoringTier.Pq]]): the store's cell files
     // carry the m-byte code word `cw` beside (n_id, v, q8) and the
     // codebook persists at $dir/pq_codebook; candidates in the probed cells are
     // ADC-scored off the stored bytes (the stage-1 scan column-prunes
@@ -2704,30 +2648,15 @@ object SimilarityQueries extends QueryModule {
         |       round(coalesce(hpq.n_hits, 0) * 1.0 / tn.t_n, 4) AS recall
         |FROM tn LEFT JOIN hpq USING (q_id)""".stripMargin)),
 
-    // Hybrid retrieval over the q8 tier ([[HybridRetrieval
-    // .hybridTopKWithQ8]]): BM25 fused with the integer-scored candidate
+    // Hybrid retrieval over the q8 tier ([[HybridRetrieval.hybridTopKWith]]
+    // at [[ScoringTier.Q8]]): BM25 fused with the integer-scored candidate
     // tier served off the store's byte-packed q8 column — completes the
     // serving matrix (brute / IVF / q8 / PQ, one fusion contract). The
     // oracle composes the lexical CTEs with ann_ivf_stored_q8's quantized
     // probe/cut/rerank replay at the hybrid's kCand·rerankFactor = 120.
-    GraftQuery(
-      "ann_hybrid_q8",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-        val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
-        val out = freshStoreDir(s, dir, "hybrid_q8_store")
-        IvfObjectStore.create(s, GraftSimilarity.buildIvfIndex(e), out)
-        graft.operators.HybridRetrieval.hybridTopKWithQ8(
-          IvfObjectStore.read(s, out), docs, queries,
-          k = 10, kCand = 30, rrfK = 60, nprobe = 4, rerankFactor = 4)
-      },
-      Some(hybridQ8OracleSql)),
+    GraftQuery("ann_hybrid_q8",
+               hybridStoredRow("hybrid_q8_store", ScoringTier.Q8(4)),
+               Some(hybridQ8OracleSql)),
 
     // Rerank-budget SWEEP for the PQ tier ([[GraftPq.pqBudgetSweep]] —
     // the measurement pqAutoBudget picks deployment budgets from): ONE
@@ -2806,12 +2735,7 @@ object SimilarityQueries extends QueryModule {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val e = vecs(s, dir)
-        val queries = docs.filter(col("doc_id") < 10)
-          .join(e, col("doc_id") === col("vec_id"))
-          .select(col("doc_id").as("q_id"),
-                  graft.operators.GraftText.whitespaceTokens(col("text"))
-                    .as("q_terms"),
-                  col("v").as("qv"))
+        val queries = hybridQueryBlock(docs, e)
         val out = freshStoreDir(s, dir, "hybrid_pq_store")
         IvfObjectStore.create(s, GraftSimilarity.buildIvfIndex(e), out,
           pq = Some(

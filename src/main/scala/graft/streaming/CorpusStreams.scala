@@ -318,11 +318,8 @@ object CorpusStreams {
       .crossJoin(enc)
       .filter(col("n_id") =!= col("q_id"))
       .crossJoin(GraftPq.normLutRow(cb))
-      .select(col("q_id"), col("ts"), col("qv"), col("n_id"), expr(
-        """CASE WHEN __qn = 0D OR graft_pq_adc(__cw, __nlut) = 0D THEN 0D
-          |ELSE graft_pq_adc(__cw, __lut)
-          |     / sqrt(__qn * graft_pq_adc(__cw, __nlut)) END""".stripMargin)
-        .as("ac"))
+      .select(col("q_id"), col("ts"), col("qv"), col("n_id"),
+              GraftPq.adcCosine("__cw").as("ac"))
       .groupBy(col("q_id"), col("ts"))
       .agg(expr(s"graft_topk(ac, n_id, $kk)").as("tk"),
            first(col("qv")).as("qv"))

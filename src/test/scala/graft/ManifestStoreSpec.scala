@@ -505,6 +505,36 @@ class ManifestStoreSpec extends GraftFunSuite {
     }
   }
 
+  test("store id guard: a fractional id column is refused by append and " +
+       "delete before any staging — no truncated id lands or matches, " +
+       "and no version publishes") {
+    withMockS3 { base =>
+      val e = vectors().filter(col("vec_id") < 60)
+      val dir = s"s3a:$base/id_guard"
+      IvfObjectStore.create(spark, GraftSimilarity.buildIvfIndex(e), dir)
+      val before = IvfObjectStore.versions(spark, dir)
+      // 1.5 would cast to n_id 1: an append would merge it into row 1's
+      // id and a delete would remove row 1
+      val frac = e.filter(col("vec_id") === 1)
+        .select(lit(1.5).as("vec_id"), col("v"))
+      val appendEx = intercept[IllegalArgumentException] {
+        IvfObjectStore.append(spark, dir, frac)
+      }
+      assert(appendEx.getMessage.contains("'vec_id'"),
+        s"append refusal must name the column: ${appendEx.getMessage}")
+      val deleteEx = intercept[IllegalArgumentException] {
+        IvfObjectStore.delete(spark, dir, frac.select(col("vec_id")))
+      }
+      assert(deleteEx.getMessage.contains("'vec_id'"),
+        s"delete refusal must name the column: ${deleteEx.getMessage}")
+      assert(IvfObjectStore.versions(spark, dir) == before,
+        "a refused append or delete must not publish a version")
+      assert(IvfObjectStore.read(spark, dir).assigned
+               .filter(col("n_id") === 1).count() == 1,
+        "row 1 must be untouched")
+    }
+  }
+
   test("metadata on the manifest layout: create stages the metadata " +
        "column, appends must carry it (fail-loud), filtered serve works") {
     withMockS3 { base =>

@@ -538,7 +538,7 @@ class SimilaritySpec extends GraftFunSuite {
        "the brute hybrid tier bit-for-bit, served straight off the at-rest " +
        "PQ store; lexical candidates survive any semantic cut") {
     import graft.operators.{GraftPq, GraftSimilarity, GraftText,
-                            HybridRetrieval, IvfObjectStore}
+                            HybridRetrieval, IvfObjectStore, ScoringTier}
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS v")
@@ -562,37 +562,25 @@ class SimilaritySpec extends GraftFunSuite {
       .collect().toSet
     assert(pqServed == brute,
       "covering probe + covering budget must reproduce the brute fusion")
-    // the q8 leg behind the same fusion (the store carries q8 beside cw):
-    // covering probe + covering budget equals the brute fusion too
-    val q8Served = HybridRetrieval
-      .hybridTopKWithQ8(IvfObjectStore.read(spark, dir), docs,
-                        queries, k = 10, kCand = 30, nprobe = cells,
-                        rerankFactor = coveringRf)
-      .collect().toSet
-    assert(q8Served == brute,
-      "the q8 hybrid tier must also reproduce the brute fusion at " +
-      "covering settings")
-    // the int4 leg completes the fusion matrix (brute/IVF/q8/q4/PQ
-    // behind one contract): same covering parity, in-memory q4Augment
-    // (the at-rest tier is opt-in at write)
-    val q4Served = HybridRetrieval
-      .hybridTopKWithQ4(GraftSimilarity.q4Augment(idx), docs,
-                        queries, k = 10, kCand = 30, nprobe = cells,
-                        rerankFactor = coveringRf)
-      .collect().toSet
-    assert(q4Served == brute,
-      "the q4 hybrid tier must also reproduce the brute fusion at " +
-      "covering settings")
-    // the one-bit leg bottoms out the ladder (brute/IVF/q8/q4/b1/PQ
-    // behind one contract): same covering parity, in-memory b1Augment
-    val b1Served = HybridRetrieval
-      .hybridTopKWithB1(GraftSimilarity.b1Augment(idx), docs,
-                        queries, k = 10, kCand = 30, nprobe = cells,
-                        rerankFactor = coveringRf)
-      .collect().toSet
-    assert(b1Served == brute,
-      "the b1 hybrid tier must also reproduce the brute fusion at " +
-      "covering settings")
+    // every compressed tier behind the same fusion: covering probe +
+    // covering budget equals the brute fusion. The store carries q8 and
+    // cw; the q4 and b1 columns are attached in memory (those at-rest
+    // tiers are opt-in at write)
+    val stored = IvfObjectStore.read(spark, dir)
+    for ((nm, index, tier) <- Seq(
+        ("q8", stored, ScoringTier.Q8(coveringRf)),
+        ("q4", ScoringTier.Q4().attach(idx), ScoringTier.Q4(coveringRf)),
+        ("b1", ScoringTier.B1().attach(idx), ScoringTier.B1(coveringRf)),
+        ("pq", stored, ScoringTier.Pq(GraftPq.readPqCodebook(spark, dir),
+                                      coveringRf)))) {
+      val served = HybridRetrieval
+        .hybridTopKWith(index, docs, queries, k = 10, kCand = 30,
+                        nprobe = cells, tier = tier)
+        .collect().toSet
+      assert(served == brute,
+        s"the $nm hybrid tier must also reproduce the brute fusion at " +
+        "covering settings")
+    }
     // a REAL cut (default budget, nprobe 1): lexically-surfaced documents
     // can never be lost — the PQ trade is confined to the semantic leg
     val pruned = HybridRetrieval
@@ -606,10 +594,11 @@ class SimilaritySpec extends GraftFunSuite {
       "lexical-leg candidates must survive any semantic cut")
   }
 
-  test("ivfTopKWithQ8: q8 store layout (column present, n_id-sorted cells); " +
-       "covering rerankFactor equals the exact serve; survivor fetch " +
-       "pushes a literal n_id filter into the store scan") {
-    import graft.operators.{GraftSimilarity, IvfObjectStore}
+  test("ivfTopKWith(tier = Q8): q8 store layout (column present, " +
+       "n_id-sorted cells); covering rerankFactor equals the exact " +
+       "serve; survivor fetch pushes a literal n_id filter into the " +
+       "store scan") {
+    import graft.operators.{GraftSimilarity, IvfObjectStore, ScoringTier}
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS v")
     val q = e.filter(col("vec_id") < 10)
@@ -640,14 +629,15 @@ class SimilaritySpec extends GraftFunSuite {
     // cannot drop a true candidate → bit-equal to the exact serve
     val covering = e.count().toInt
     val q8cov = GraftSimilarity
-      .ivfTopKWithQ8(idx, q, k = 5, nprobe = 4, rerankFactor = covering)
+      .ivfTopKWith(idx, q, k = 5, nprobe = 4,
+                   tier = ScoringTier.Q8(rerankFactor = covering))
       .collect().toSet
     assert(q8cov == exact,
       "covering rerankFactor must reproduce the exact serve bit-for-bit")
     // default factor: k exact-cosine rows per query, self excluded, and
     // the rerank scan carries the literal In(n_id, ...) pushdown
     val df = GraftSimilarity
-      .ivfTopKWithQ8(idx, q, k = 5, nprobe = 4, rerankFactor = 4)
+      .ivfTopKWith(idx, q, k = 5, nprobe = 4, tier = ScoringTier.Q8(4))
     val rows = df.collect()
     val byQ = rows.groupBy(_.getLong(0))
     assert(byQ.size == 10)
@@ -664,15 +654,16 @@ class SimilaritySpec extends GraftFunSuite {
     val overlap = rows.map(r => (r.getLong(0), r.getLong(1))).toSet
       .intersect(exact.map(r => (r.getLong(0), r.getLong(1))).toSet).size
     assert(overlap >= 40, s"q8 tier recall vs exact serve: $overlap/50")
-    // in-memory guard: an index without q8 is refused loudly, and
-    // q8Augment makes it servable
+    // in-memory guard: an index without q8 is refused loudly, and the
+    // tier's attach makes it servable
     intercept[IllegalArgumentException] {
-      GraftSimilarity.ivfTopKWithQ8(GraftSimilarity.buildIvfIndex(e), q,
-                                    k = 5)
+      GraftSimilarity.ivfTopKWith(GraftSimilarity.buildIvfIndex(e), q,
+                                  k = 5, tier = ScoringTier.Q8())
     }
     val aug = GraftSimilarity
-      .ivfTopKWithQ8(GraftSimilarity.q8Augment(GraftSimilarity.buildIvfIndex(e)),
-                     q, k = 5, nprobe = 4, rerankFactor = covering)
+      .ivfTopKWith(ScoringTier.Q8().attach(GraftSimilarity.buildIvfIndex(e)),
+                   q, k = 5, nprobe = 4,
+                   tier = ScoringTier.Q8(rerankFactor = covering))
       .collect().toSet
     assert(aug == exact)
   }
@@ -681,7 +672,7 @@ class SimilaritySpec extends GraftFunSuite {
        "(incl. odd-dim pad neutrality), the stored serve matches the " +
        "exact serve at a covering budget, and the at-rest bytes are " +
        "ceil(d/2)") {
-    import graft.operators.{GraftSimilarity, IvfObjectStore}
+    import graft.operators.{GraftSimilarity, IvfObjectStore, ScoringTier}
     // kernel parity: graft_q4b_cos over packed nibbles ==
     // the independently decoded integer arithmetic, including an ODD
     // dimension whose pad nibble must contribute nothing
@@ -730,27 +721,31 @@ class SimilaritySpec extends GraftFunSuite {
       .collect().toSet
     val covering = e.count().toInt
     assert(GraftSimilarity
-             .ivfTopKWithQ4(idx, q, k = 5, nprobe = 4,
-                            rerankFactor = covering).collect().toSet == exact,
+             .ivfTopKWith(idx, q, k = 5, nprobe = 4,
+                          tier = ScoringTier.Q4(rerankFactor = covering))
+             .collect().toSet == exact,
       "covering rerankFactor must reproduce the exact serve bit-for-bit")
     val rows = GraftSimilarity
-      .ivfTopKWithQ4(idx, q, k = 5, nprobe = 4, rerankFactor = 4).collect()
+      .ivfTopKWith(idx, q, k = 5, nprobe = 4, tier = ScoringTier.Q4(4))
+      .collect()
     val byQ = rows.groupBy(_.getLong(0))
     assert(byQ.size == 10)
     for ((qid, rs) <- byQ) {
       assert(rs.length == 5, s"q=$qid got ${rs.length}")
       assert(!rs.map(_.getLong(1)).contains(qid), "self excluded")
     }
-    // in-memory guard + augment, mirroring the q8 contract
+    // in-memory guard + attach, mirroring the q8 contract
     intercept[IllegalArgumentException] {
-      GraftSimilarity.ivfTopKWithQ4(
+      GraftSimilarity.ivfTopKWith(
         graft.operators.GraftSimilarity.IvfIndex(
-          idx.centroids, idx.assigned.drop("q4")), q, k = 5)
+          idx.centroids, idx.assigned.drop("q4")), q, k = 5,
+        tier = ScoringTier.Q4())
     }
     assert(GraftSimilarity
-             .ivfTopKWithQ4(GraftSimilarity.q4Augment(
-                              GraftSimilarity.buildIvfIndex(e)),
-                            q, k = 5, nprobe = 4, rerankFactor = covering)
+             .ivfTopKWith(ScoringTier.Q4().attach(
+                            GraftSimilarity.buildIvfIndex(e)),
+                          q, k = 5, nprobe = 4,
+                          tier = ScoringTier.Q4(rerankFactor = covering))
              .collect().toSet == exact)
   }
 
@@ -758,7 +753,7 @@ class SimilaritySpec extends GraftFunSuite {
        "(incl. pad neutrality at non-multiple-of-8 dims), the stored " +
        "serve matches the exact serve at a covering budget, the at-rest " +
        "bytes are ceil(d/8), and the tier is opt-in at write") {
-    import graft.operators.{GraftSimilarity, IvfObjectStore}
+    import graft.operators.{GraftSimilarity, IvfObjectStore, ScoringTier}
     // kernel parity: graft_b1_cos over packed sign bits == the
     // independently computed (bits − 2·ham)/bits on PADDED bits; pad
     // bits agree on both sides so ham is dim-only
@@ -806,26 +801,29 @@ class SimilaritySpec extends GraftFunSuite {
       .collect().toSet
     val covering = e.count().toInt
     assert(GraftSimilarity
-             .ivfTopKWithB1(idx, q, k = 5, nprobe = 4,
-                            rerankFactor = covering).collect().toSet == exact,
+             .ivfTopKWith(idx, q, k = 5, nprobe = 4,
+                          tier = ScoringTier.B1(rerankFactor = covering))
+             .collect().toSet == exact,
       "covering rerankFactor must reproduce the exact serve bit-for-bit")
     val rows = GraftSimilarity
-      .ivfTopKWithB1(idx, q, k = 5, nprobe = 4, rerankFactor = 4).collect()
+      .ivfTopKWith(idx, q, k = 5, nprobe = 4, tier = ScoringTier.B1(4))
+      .collect()
     val byQ = rows.groupBy(_.getLong(0))
     assert(byQ.size == 10)
     for ((qid, rs) <- byQ) {
       assert(rs.length == 5, s"q=$qid got ${rs.length}")
       assert(!rs.map(_.getLong(1)).contains(qid), "self excluded")
     }
-    // in-memory guard + augment, mirroring the q8/q4 contract
+    // in-memory guard + attach, mirroring the q8/q4 contract
     intercept[IllegalArgumentException] {
-      GraftSimilarity.ivfTopKWithB1(GraftSimilarity.buildIvfIndex(e), q,
-                                    k = 5)
+      GraftSimilarity.ivfTopKWith(GraftSimilarity.buildIvfIndex(e), q,
+                                  k = 5, tier = ScoringTier.B1())
     }
     assert(GraftSimilarity
-             .ivfTopKWithB1(GraftSimilarity.b1Augment(
-                              GraftSimilarity.buildIvfIndex(e)),
-                            q, k = 5, nprobe = 4, rerankFactor = covering)
+             .ivfTopKWith(ScoringTier.B1().attach(
+                            GraftSimilarity.buildIvfIndex(e)),
+                          q, k = 5, nprobe = 4,
+                          tier = ScoringTier.B1(rerankFactor = covering))
              .collect().toSet == exact)
   }
 
@@ -833,7 +831,8 @@ class SimilaritySpec extends GraftFunSuite {
        "stored serves switch to the broadcast-join fetch — bit-identical " +
        "results, one REUSED broadcast exchange instead of a driver " +
        "collect and an In(n_id, ...) literal plan") {
-    import graft.operators.{GraftPq, GraftSimilarity, IvfObjectStore}
+    import graft.operators.{GraftPq, GraftSimilarity, IvfObjectStore,
+                            ScoringTier}
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS v")
     val q = e.filter(col("vec_id") < 10)
@@ -843,19 +842,20 @@ class SimilaritySpec extends GraftFunSuite {
     IvfObjectStore.create(spark, GraftSimilarity.buildIvfIndex(e), dir,
       pq = Some(GraftPq.trainPq(e, m = 8, ksub = 16, iters = 2)))
     val idx = IvfObjectStore.read(spark, dir)
-    def pqServe() = GraftPq.ivfPqTopKWithCw(
-      IvfObjectStore.read(spark, dir), GraftPq.readPqCodebook(spark, dir),
-      q, k = 5, nprobe = 4, rerankFactor = 4)
+    def pqServe() = GraftSimilarity.ivfTopKWith(
+      IvfObjectStore.read(spark, dir), q, k = 5, nprobe = 4,
+      tier = ScoringTier.Pq(GraftPq.readPqCodebook(spark, dir), 4))
     def asSet(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
                      r.getDouble(3))).toSet
     val q8Lit = asSet(GraftSimilarity
-      .ivfTopKWithQ8(idx, q, k = 5, nprobe = 4, rerankFactor = 4).collect())
+      .ivfTopKWith(idx, q, k = 5, nprobe = 4, tier = ScoringTier.Q8(4))
+      .collect())
     val pqLit = asSet(pqServe().collect())
     spark.conf.set("spark.graft.survivorFetchMaxLiterals", "1")
     try {
       val q8Bc = GraftSimilarity
-        .ivfTopKWithQ8(idx, q, k = 5, nprobe = 4, rerankFactor = 4)
+        .ivfTopKWith(idx, q, k = 5, nprobe = 4, tier = ScoringTier.Q8(4))
       assert(asSet(q8Bc.collect()) == q8Lit,
         "q8 serve must be bit-identical on both sides of the gate")
       val q8Plan = q8Bc.queryExecution.executedPlan.toString
@@ -1188,7 +1188,7 @@ class SimilaritySpec extends GraftFunSuite {
   test("metadata-filtered serve: label rides the store, the predicate " +
        "pushes to the parquet scan, covering nprobe equals brute force " +
        "over the filtered population, and the quantized rungs agree") {
-    import graft.operators.{GraftSimilarity, IvfObjectStore}
+    import graft.operators.{GraftSimilarity, IvfObjectStore, ScoringTier}
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .selectExpr("vec_id", "transform(embedding, x -> cast(x AS double)) AS v",
                   "label")
@@ -1241,10 +1241,10 @@ class SimilaritySpec extends GraftFunSuite {
       .collect().toSet
     val covering = e.count().toInt
     for ((nm, srv) <- Seq(
-        ("q8", GraftSimilarity.ivfTopKWithQ8(idx, q, k = 5, nprobe = 4,
-           rerankFactor = covering, where = Some(pred))),
-        ("q4", GraftSimilarity.ivfTopKWithQ4(idx, q, k = 5, nprobe = 4,
-           rerankFactor = covering, where = Some(pred)))))
+        ("q8", GraftSimilarity.ivfTopKWith(idx, q, k = 5, nprobe = 4,
+           where = Some(pred), tier = ScoringTier.Q8(covering))),
+        ("q4", GraftSimilarity.ivfTopKWith(idx, q, k = 5, nprobe = 4,
+           where = Some(pred), tier = ScoringTier.Q4(covering)))))
       assert(srv.collect().toSet == exact4,
         s"covering-budget filtered $nm serve must equal the filtered exact serve")
     // the PQ rung takes the same predicate: lossless codebook (ksub
@@ -1260,9 +1260,9 @@ class SimilaritySpec extends GraftFunSuite {
     val pqIdx = IvfObjectStore.read(spark, pqDir)
     assert(pqIdx.assigned.columns.contains("label"),
       "metadata must ride through the PQ store write")
-    val pqServed = graft.operators.GraftPq.ivfPqTopKWithCw(
-        pqIdx, graft.operators.GraftPq.readPqCodebook(spark, pqDir), q,
-        k = 5, nprobe = 4, rerankFactor = covering, where = Some(pred))
+    val pqServed = GraftSimilarity.ivfTopKWith(pqIdx, q, k = 5, nprobe = 4,
+        where = Some(pred), tier = ScoringTier.Pq(
+          graft.operators.GraftPq.readPqCodebook(spark, pqDir), covering))
       .collect().toSet
     assert(pqServed == exact4,
       "covering-budget filtered PQ serve must equal the filtered exact serve")
